@@ -26,6 +26,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * service (what Iceberg's catalog does); on a filesystem rename is
   * atomic already.
   *
+  * Fan-out rule: whenever the driver runs several Spark jobs or file
+  * moves at once (a commit's table writes and row count, the tables of
+  * a staged ingest and its partition landings, compaction and delete
+  * rewrites), it goes through [[DriverFanOut]] with a width fixed at the
+  * call site. Each call gets its own bounded pool, so nested fan-outs
+  * cannot deadlock; every worker carries the caller's job group; and
+  * every task settles before the first failure is rethrown, so no write
+  * is still running into a partition directory when the caller resumes,
+  * retries or discards.
+  *
   * Layout:
   * {{{
   * root/
@@ -178,94 +188,72 @@ class IceLite(val root: String) extends TableIO {
   private def commitImpl(snap: Long, part: String,
       rowCount: Option[() => Long], tables: Map[String, DataFrame],
       srcFiles: Option[Seq[String]] = None): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // blocking{}: these futures spend their life awaiting Spark jobs,
-    // so tell the shared fork-join pool to grow past its #cores
-    // parallelism instead of starving unrelated callers (ADVICE r5).
-    // Local properties (job group / description / scheduler pool) are
-    // per-thread inheritable state; pool threads may predate the
-    // caller's set, so the relevant keys are re-applied explicitly.
-    val sc = tables.headOption.map(_._2.sparkSession.sparkContext)
-    val propKeys = Seq("spark.jobGroup.id", "spark.job.description",
-      "spark.job.interruptOnCancel", "spark.scheduler.pool")
-    val props = sc.toSeq.flatMap(c =>
-      propKeys.map(k => k -> c.getLocalProperty(k)))
-    def withProps[A](f: => A): A = {
-      // set absent keys to null too (null CLEARS): a reused pool thread
-      // may still carry a PREVIOUS caller's job group, and a later
-      // cancelJobGroup for that stale group would kill this commit's jobs
-      sc.foreach(c => props.foreach { case (k, v) => c.setLocalProperty(k, v) })
-      f
+    val spark = tables.values.headOption.fold(SparkSession.active)(_.sparkSession)
+    // the row count (Left) runs as one more task beside the table writes
+    val done = DriverFanOut(spark, tables.size + 1,
+        rowCount.map(Left(_)).toSeq ++ tables.toSeq.map(Right(_))) {
+      case Left(rc) => Left(rc())
+      case Right((name, df)) =>
+        val dir = partDataDir(snap, name, part)
+        df.write.mode("overwrite").parquet(dir)
+        Right(name -> footerStats(df.sparkSession, dir))
     }
-    val countF = rowCount.map(rc => Future(blocking(withProps(rc()))))
-    val statsF = Future.traverse(tables.toSeq) { case (name, df) =>
-      Future {
-        blocking {
-          withProps {
-            val dir = partDataDir(snap, name, part)
-            df.write.mode("overwrite").parquet(dir)
-            name -> footerStats(df.sparkSession, dir)
-          }
-        }
-      }
-    }
-    val stats = Await.result(statsF, Duration.Inf).toMap
-    val nRows = countF.map(Await.result(_, Duration.Inf))
+    val stats = done.collect { case Right(s) => s }.toMap
+    val nRows = done.collectFirst { case Left(n) => n }
       .getOrElse(stats.valuesIterator.map(_.rows).sum)
     // the written files' exact Spark schema, recorded per table — the
     // schema-evolution ledger [[readTableEvolved]] groups partitions by
     // (old partitions keep their era's schema; reads reconcile)
     val schemas = tables.map { case (n, df) => n -> df.schema.json }
-    atomicWrite(lineageDir(snap).resolve(s"${enc(part)}.json"),
-      JsonMethods.compact(JsonMethods.render(
-        lineageJson(snap, part, nRows, stats, Map.empty, "ingest", srcFiles,
-          schemas))))
+    writeLineage(snap, part, nRows, stats, Map.empty, "ingest", srcFiles,
+      schemas)
   }
 
-  /** One partition's lineage record. `dataSnap` maps each table whose
-    * data lives under a DIFFERENT snapshot's directory (the compaction
-    * copy-on-write indirection) to that snapshot id; tables absent from
-    * it live under `snap` itself. `tableRows` carries the exact
-    * footer-derived per-table row counts — the cardinality stats that
-    * let join planning ([[graft.validate.Referential]]) pick broadcast
-    * vs shuffle from ONE manifest read, zero probe jobs. `op` names the
-    * operation that produced the record ("ingest" / "compact"): a
-    * resuming ingest must refuse another operation's in-progress
-    * records instead of silently treating them as its own completed
-    * partitions (ADVICE r6). */
-  private def lineageJson(snap: Long, part: String, nRows: Long,
+  /** Write one partition's lineage record: the commit point of every
+    * operation. `dataSnap` maps each table whose data lives under a
+    * DIFFERENT snapshot's directory (the compaction copy-on-write
+    * indirection) to that snapshot id; tables absent from it live under
+    * `snap` itself. `tableRows` carries the exact footer-derived
+    * per-table row counts — the cardinality stats that let join
+    * planning ([[graft.validate.Referential]]) pick broadcast vs shuffle
+    * from ONE manifest read, zero probe jobs. `op` names the operation
+    * that produced the record ("ingest" / "compact"): a resuming ingest
+    * must refuse another operation's in-progress records instead of
+    * silently treating them as its own completed partitions (ADVICE r6). */
+  private def writeLineage(snap: Long, part: String, nRows: Long,
       stats: Map[String, TableFooter],
       dataSnap: Map[String, Long], op: String,
-      srcFiles: Option[Seq[String]] = None,
-      schemas: Map[String, String] = Map.empty): JObject = JObject(
-    List(
-      "snapshot" -> JLong(snap), "part" -> JString(part),
-      "op" -> JString(op),
-      "rows" -> JLong(nRows),
-      "tables" -> JArray(stats.keys.toList.sorted.map(JString(_))),
-      "tableRows" -> JObject(stats.toList.sortBy(_._1).map { case (t, tf) =>
-        t -> JLong(tf.rows)
-      }),
-      "stats" -> JObject(stats.toList.sortBy(_._1).map { case (t, tf) =>
-        t -> JObject(tf.colRanges.toList.sortBy(_._1).map { case (c, (mn, mx)) =>
-          c -> JObject("min" -> JDouble(mn), "max" -> JDouble(mx))
-        })
-      })) ++
-      (if (schemas.isEmpty) Nil
-       else List("schemas" -> JObject(schemas.toList.sortBy(_._1).map {
-         // inline JSON interns to a content-addressed ref; an already-
-         // interned ref (carried from a source record) passes through
-         case (t, j) => t -> JString(
-           if (j.startsWith("{")) internSchema(j) else j)
-       }))) ++
-      srcFiles.map(fs =>
-        "srcFiles" -> JArray(fs.toList.map(JString(_)))).toList ++
-      (if (dataSnap.isEmpty) Nil
-       else List("dataSnap" -> JObject(dataSnap.toList.sortBy(_._1).map {
-         case (t, s) => t -> JLong(s)
-       }))))
+      srcFiles: Option[Seq[String]], schemas: Map[String, String]): Unit = {
+    val doc = JObject(
+      List(
+        "snapshot" -> JLong(snap), "part" -> JString(part),
+        "op" -> JString(op),
+        "rows" -> JLong(nRows),
+        "tables" -> JArray(stats.keys.toList.sorted.map(JString(_))),
+        "tableRows" -> JObject(stats.toList.sortBy(_._1).map { case (t, tf) =>
+          t -> JLong(tf.rows)
+        }),
+        "stats" -> JObject(stats.toList.sortBy(_._1).map { case (t, tf) =>
+          t -> JObject(tf.colRanges.toList.sortBy(_._1).map { case (c, (mn, mx)) =>
+            c -> JObject("min" -> JDouble(mn), "max" -> JDouble(mx))
+          })
+        })) ++
+        (if (schemas.isEmpty) Nil
+         else List("schemas" -> JObject(schemas.toList.sortBy(_._1).map {
+           // inline JSON interns to a content-addressed ref; an already-
+           // interned ref (carried from a source record) passes through
+           case (t, j) => t -> JString(
+             if (j.startsWith("{")) internSchema(j) else j)
+         }))) ++
+        srcFiles.map(fs =>
+          "srcFiles" -> JArray(fs.toList.map(JString(_)))).toList ++
+        (if (dataSnap.isEmpty) Nil
+         else List("dataSnap" -> JObject(dataSnap.toList.sortBy(_._1).map {
+           case (t, s) => t -> JLong(s)
+         }))))
+    atomicWrite(lineageDir(snap).resolve(s"${enc(part)}.json"),
+      JsonMethods.compact(JsonMethods.render(doc)))
+  }
 
   /** The operation that produced a partition's lineage record ("ingest",
     * "compact") — the per-record audit tag; the O(1) resume guard is
@@ -668,11 +656,8 @@ class IceLite(val root: String) extends TableIO {
   }
 
   /** Ingest `df` as `table` under in-progress snapshot `snap`, routed
-    * by the table's bucket spec in ONE Spark job: rows are written
-    * `partitionBy` the bucket transform into a staging dir under the
-    * root, each bucket directory is RENAMED into its partition slot
-    * (same filesystem — O(1) per bucket, no data copy), and lineage
-    * commits from footers (pool-parallel driver IO, like commitImpl).
+    * by the table's bucket spec in ONE Spark job: the rows land through
+    * [[landStaged]], `partitionBy` the bucket transform.
     * Optional parquet BLOOM FILTERS are written for `bloomColumns`:
     * inside a bucket, the native parquet reader then skips whole ROW
     * GROUPS on point predicates — the second pruning level under the
@@ -690,128 +675,99 @@ class IceLite(val root: String) extends TableIO {
       sys.error(s"table '$table' has no bucket spec; call setBucketSpec first"))
     require(!df.columns.contains(IceLite.BucketCol),
       s"input already has a ${IceLite.BucketCol} column")
-    val schemaJson = df.schema.json
-    val staging = p("tmp", s"bucketed-$snap-${enc(table)}")
-    deleteRecursively(staging)
     val routed = df.withColumn(IceLite.BucketCol,
       IceLite.bucketColumn(df(spec.column), spec.buckets))
-    // cluster by bucket before the partitionBy write (hash
-    // write-distribution): one file per bucket instead of one per
-    // (task, bucket), and the write parallelizes across shuffle
-    // partitions even from a single input split — see ingestPartitionedBy
-    val np = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val w0 = routed.repartition(np, routed(IceLite.BucketCol))
-      .write.mode("overwrite").partitionBy(IceLite.BucketCol)
-      .options(writeOptions)
     // bloom bytes are proportional to expected NDV — the parquet-mr
     // default (1M) writes ~1.2 MiB of filter per column chunk, which
-    // can exceed the data it guards on small files. Size it to the
-    // per-bucket row count unless the caller already did.
-    // a row estimate is unavailable plan-free, so default to 2^17
-    // distinct values (~160 KiB of filter at the 1% default fpp);
-    // callers with better knowledge override via writeOptions
-    val ndvKeys = bloomColumns
-      .map(c => s"parquet.bloom.filter.expected.ndv#$c")
-      .filterNot(writeOptions.contains)
-    ndvKeys.foldLeft(
-      bloomColumns.foldLeft(w0)((w, c) =>
-        w.option(s"parquet.bloom.filter.enabled#$c", "true")))(
-      (w, k) => w.option(k, (1L << 17).toString))
-      .parquet(staging.toString)
-    landBucketStaging(spark, snap, table, staging, schemaJson, "ingest")
+    // can exceed the data it guards on small files. A row estimate is
+    // unavailable plan-free, so default to 2^17 distinct values
+    // (~160 KiB of filter at the 1% default fpp); callers with better
+    // knowledge override via writeOptions
+    val bloomOptions = bloomColumns.flatMap { c =>
+      val ndv = s"parquet.bloom.filter.expected.ndv#$c"
+      Seq(s"parquet.bloom.filter.enabled#$c" -> "true") ++
+        (if (writeOptions.contains(ndv)) Nil else Seq(ndv -> (1L << 17).toString))
+    }
+    landStaged(spark, snap, "ingest", IceLite.BucketCol, Map(table -> routed),
+      Map(table -> df.schema.json), "bucket=" + _, writeOptions ++ bloomOptions)
   }
 
-  /** Land a `partitionBy(BucketCol)` staging directory as bucket
-    * partitions: rename each bucket dir into its slot (same
-    * filesystem — O(1), no data copy) and commit lineage from footers,
-    * pool-parallel. Already-committed buckets are skipped (the ingest
-    * resume path). Returns the landed part names. */
-  private def landBucketStaging(spark: SparkSession, snap: Long,
-      table: String, staging: Path, schemaJson: String,
-      op: String): Seq[String] =
-    landStaging(spark, snap, table, staging, schemaJson, op,
-      dirName => s"bucket=${dirName.stripPrefix(s"${IceLite.BucketCol}=")}")
-
-  private def landStaging(spark: SparkSession, snap: Long,
-      table: String, staging: Path, schemaJson: String, op: String,
-      partOf: String => String): Seq[String] = {
-    val dirNames = withList(staging)(_.map(_.getFileName.toString)
-      .filter(_.contains("=")).toSeq).sorted
-    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val landedF = Future.traverse(dirNames) { dirName =>
-      Future {
-        blocking {
-          val part = partOf(dirName)
-          val src = staging.resolve(dirName)
-          if (isPartCompleted(snap, part)) deleteRecursively(src)
-          else {
-            val dst = Paths.get(partDataDir(snap, table, part))
-            deleteRecursively(dst) // a crashed move's partial slot
-            Files.createDirectories(dst.getParent)
-            Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-            val tf = footerStats(spark, dst.toString)
-            atomicWrite(lineageDir(snap).resolve(s"${enc(part)}.json"),
-              JsonMethods.compact(JsonMethods.render(lineageJson(
-                snap, part, tf.rows, Map(table -> tf), Map.empty, op,
-                None, Map(table -> schemaJson)))))
-          }
-          part
-        }
-      }
+  /** The staged landing behind every one-job ingest
+    * ([[ingestPartitionedTables]], [[ingestBucketed]], [[mergeRows]]).
+    * Each table is clustered by `partCol` (Iceberg's hash
+    * write-distribution: one task owns each value, so a partition gets
+    * one file instead of one per (task, value), and the write
+    * parallelizes across shuffle partitions even from a single input
+    * split) and written `partitionBy(partCol)` into its own staging dir,
+    * the tables as concurrent jobs. Each value's dirs are then RENAMED
+    * into their partition slots (same filesystem — O(1), no data copy)
+    * and ONE lineage record per partition lists every table present
+    * there, rows = the sum of their footer rows. Spark's dir-name
+    * escaping round-trips through [[dec]] (both are plain per-char %XX);
+    * `partOf` maps the decoded value to the part name. Partitions
+    * already committed under `snap` are skipped (the resume path).
+    * Returns the landed part names, sorted. */
+  private def landStaged(spark: SparkSession, snap: Long, op: String,
+      partCol: String, tables: Map[String, DataFrame],
+      schemas: Map[String, String], partOf: String => String,
+      writeOptions: Map[String, String] = Map.empty): Seq[String] = {
+    val staged = tables.map { case (name, _) =>
+      name -> p("tmp", s"stage-$snap-${enc(name)}")
     }
-    val landed = Await.result(landedF, Duration.Inf)
-    deleteRecursively(staging)
+    staged.values.foreach(deleteRecursively)
+    val np = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    DriverFanOut(spark, 16, tables.toSeq) { case (name, df) =>
+      df.repartition(np, df(partCol)) // explicit N: a bare repartition(col)
+        .write.mode("overwrite").partitionBy(partCol) // is AQE-coalescible
+        .options(writeOptions)
+        .parquet(staged(name).toString)
+    }
+    val partDirs = staged.toSeq
+      .flatMap { case (name, st) =>
+        withList(st)(_.map(_.getFileName.toString)
+          .filter(_.contains("=")).toSeq)
+          .map(d => (partOf(dec(d.substring(d.indexOf('=') + 1))), name,
+            st.resolve(d)))
+      }
+      .groupBy(_._1).toSeq.sortBy(_._1)
+    val landed = DriverFanOut(spark, 16, partDirs) { case (part, dirs) =>
+      if (isPartCompleted(snap, part))
+        dirs.foreach { case (_, _, src) => deleteRecursively(src) }
+      else {
+        val stats = dirs.map { case (_, name, src) =>
+          val dst = Paths.get(partDataDir(snap, name, part))
+          deleteRecursively(dst) // a crashed move's partial slot
+          Files.createDirectories(dst.getParent)
+          Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+          name -> footerStats(spark, dst.toString)
+        }.toMap
+        writeLineage(snap, part, stats.valuesIterator.map(_.rows).sum, stats,
+          Map.empty, op, None, schemas.filter(s => stats.contains(s._1)))
+      }
+      part
+    }
+    staged.values.foreach(deleteRecursively)
     landed
   }
 
-  /** Ingest `df` as `table` under in-progress snapshot `snap`,
-    * partitioned by the VALUES of `partCol` — the generic value/range
-    * sibling of [[ingestBucketed]], same ONE-job shape: a single
-    * `partitionBy` write to staging, O(partitions) renames, lineage
-    * from footers (pool-parallel), crash-resumable per partition.
-    * `partCol` is dropped from the written files (derivable from the
-    * partition name); Spark's path escaping is normalized back through
-    * [[dec]], so the part name is the value's exact string form (NULL
-    * values land under Spark's default-partition name). Returns the
-    * committed part names. */
-  def ingestPartitionedBy(spark: SparkSession, snap: Long, table: String,
-      df: DataFrame, partCol: String): Seq[String] = {
-    require(df.columns.contains(partCol),
-      s"input has no partition column '$partCol'")
-    val schemaJson = org.apache.spark.sql.types
-      .StructType(df.schema.filterNot(_.name == partCol)).json
-    val staging = p("tmp", s"partby-$snap-${enc(table)}")
-    deleteRecursively(staging)
-    // cluster by the partition value before the partitionBy write
-    // (Iceberg's hash write-distribution mode): each value is owned by
-    // ONE task, so a partition gets one output file instead of one per
-    // (task, value) pair — O(parts) files, not O(tasks × parts), and
-    // the write itself parallelizes across the shuffle partitions even
-    // when the source is a single input split
-    val np = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    df.repartition(np, df(partCol)) // explicit N: a bare repartition(col)
-      .write.mode("overwrite").partitionBy(partCol) // is AQE-coalescible
-      .parquet(staging.toString)
-    landStaging(spark, snap, table, staging, schemaJson, "ingest",
-      dirName => dec(dirName.substring(dirName.indexOf('=') + 1)))
-  }
-
-  /** Multi-table sibling of [[ingestPartitionedBy]]: data and its
-    * per-partition stats tables (e.g. `__profile` / `__hist` rows from
-    * [[graft.validate.IncrementalProfile.profilesByPartition]]) land
-    * together with a CONSTANT number of Spark jobs — one clustered
-    * `partitionBy` write per table, run as concurrent jobs — and ONE
-    * lineage record per partition listing every table present there.
-    * This is the bulk-ingest shape VERDICT r7 named: per-partition
-    * stats must never cost one driver-sequential Spark job per
-    * partition; a `groupBy(partCol)` pass produces all partitions'
-    * stats rows in one job and this lands them next to their data.
-    * Partition row count = the sum of its tables' footer rows (the
-    * [[commitPartitionFromFooters]] formula). A table with no rows for
-    * some partition value simply has no files there. Crash-resumable
-    * per partition like every commit. Returns the committed parts. */
+  /** Ingest data and its per-partition stats tables (e.g. `__profile` /
+    * `__hist` rows from
+    * [[graft.validate.IncrementalProfile.profilesByPartition]]) under
+    * in-progress snapshot `snap`, partitioned by the VALUES of `partCol`,
+    * with a CONSTANT number of Spark jobs — one clustered `partitionBy`
+    * write per table through [[landStaged]] — and ONE lineage record per
+    * partition listing every table present there. This is the
+    * bulk-ingest shape VERDICT r7 named: per-partition stats must never
+    * cost one driver-sequential Spark job per partition; a
+    * `groupBy(partCol)` pass produces all partitions' stats rows in one
+    * job and this lands them next to their data. `partCol` is dropped
+    * from the written files (derivable from the partition name); the
+    * part name is the value's exact string form (NULL values land under
+    * Spark's default-partition name). Partition row count = the sum of
+    * its tables' footer rows (the [[commitPartitionFromFooters]]
+    * formula). A table with no rows for some partition value simply has
+    * no files there. Crash-resumable per partition like every commit.
+    * Returns the committed parts. */
   def ingestPartitionedTables(spark: SparkSession, snap: Long,
       partCol: String, tables: Map[String, DataFrame]): Seq[String] = {
     require(tables.nonEmpty, "ingestPartitionedTables needs at least one table")
@@ -819,69 +775,11 @@ class IceLite(val root: String) extends TableIO {
       require(df.columns.contains(partCol),
         s"table '$name' has no partition column '$partCol'")
     }
-    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // local properties re-applied inside pool threads, as in commitImpl
-    val sc = tables.head._2.sparkSession.sparkContext
-    val propKeys = Seq("spark.jobGroup.id", "spark.job.description",
-      "spark.job.interruptOnCancel", "spark.scheduler.pool")
-    val props = propKeys.map(k => k -> sc.getLocalProperty(k))
-    def withProps[A](f: => A): A = {
-      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      f
-    }
     val schemas = tables.map { case (name, df) =>
       name -> org.apache.spark.sql.types
         .StructType(df.schema.filterNot(_.name == partCol)).json
     }
-    val staged: Map[String, Path] = tables.map { case (name, _) =>
-      name -> p("tmp", s"partby-$snap-${enc(name)}")
-    }
-    staged.values.foreach(deleteRecursively)
-    Await.result(Future.traverse(tables.toSeq) { case (name, df) =>
-      Future(blocking(withProps {
-        val np = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        df.repartition(np, df(partCol)) // one file per partition value — see
-          .write.mode("overwrite").partitionBy(partCol) // ingestPartitionedBy
-          .parquet(staged(name).toString)
-      }))
-    }, Duration.Inf)
-    // partition set = union across tables; Spark's dir-name escaping
-    // round-trips through dec like landStaging's (both plain %XX)
-    val partDirs: Seq[(String, Seq[(String, Path)])] = staged.toSeq
-      .flatMap { case (name, st) =>
-        withList(st)(_.map(_.getFileName.toString)
-          .filter(_.contains("=")).toSeq)
-          .map(d => (dec(d.substring(d.indexOf('=') + 1)), name, st.resolve(d)))
-      }
-      .groupBy(_._1)
-      .map { case (part, ts) => part -> ts.map(t => (t._2, t._3)).sortBy(_._1) }
-      .toSeq.sortBy(_._1)
-    val landedF = Future.traverse(partDirs) { case (part, dirs) =>
-      Future(blocking {
-        if (isPartCompleted(snap, part))
-          dirs.foreach { case (_, src) => deleteRecursively(src) }
-        else {
-          val stats = dirs.map { case (name, src) =>
-            val dst = Paths.get(partDataDir(snap, name, part))
-            deleteRecursively(dst) // a crashed move's partial slot
-            Files.createDirectories(dst.getParent)
-            Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-            name -> footerStats(spark, dst.toString)
-          }.toMap
-          atomicWrite(lineageDir(snap).resolve(s"${enc(part)}.json"),
-            JsonMethods.compact(JsonMethods.render(lineageJson(
-              snap, part, stats.valuesIterator.map(_.rows).sum, stats,
-              Map.empty, "ingest", None,
-              schemas.filter(s => stats.contains(s._1))))))
-        }
-        part
-      })
-    }
-    val landed = Await.result(landedF, Duration.Inf)
-    staged.values.foreach(deleteRecursively)
-    landed.sorted
+    landStaged(spark, snap, "ingest", partCol, tables, schemas, identity)
   }
 
   /** MERGE / upsert by the bucket-spec key (Iceberg's MERGE INTO,
@@ -909,7 +807,6 @@ class IceLite(val root: String) extends TableIO {
     require(!updates.columns.contains(IceLite.BucketCol),
       s"updates already have a ${IceLite.BucketCol} column")
     atomicWrite(lineageDir(newSnap).resolve(IceLite.OpMarker), "merge")
-    val schemaJson = updates.schema.json
     val ub = updates.withColumn(IceLite.BucketCol,
       IceLite.bucketColumn(updates(spec.column), spec.buckets))
     val affected = ub.select(IceLite.BucketCol).distinct()
@@ -937,8 +834,6 @@ class IceLite(val root: String) extends TableIO {
         s"partition '$part' co-locates tables $others with '$table'; " +
           "mergeRows rewrites single-table bucket partitions only")
     }
-    val staging = p("tmp", s"merge-$newSnap-${enc(table)}")
-    deleteRecursively(staging)
     val merged =
       if (existingParts.isEmpty) ub
       else {
@@ -952,12 +847,8 @@ class IceLite(val root: String) extends TableIO {
             IceLite.bucketColumn(survivors(spec.column), spec.buckets))
           .unionByName(ub)
       }
-    merged.repartition(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        merged(IceLite.BucketCol)) // one file per bucket — see ingestBucketed
-      .write.mode("overwrite").partitionBy(IceLite.BucketCol)
-      .parquet(staging.toString)
-    landBucketStaging(spark, newSnap, table, staging, schemaJson, "merge")
+    landStaged(spark, newSnap, "merge", IceLite.BucketCol, Map(table -> merged),
+      Map(table -> updates.schema.json), "bucket=" + _)
     commitSnapshot(newSnap,
       ((parts.toSet -- existingParts) ++ affectedParts).toSeq.sorted)
     newSnap
@@ -1271,8 +1162,9 @@ class IceLite(val root: String) extends TableIO {
     require(!Files.exists(lineageDir(newSnap)),
       s"snapshot $newSnap is in progress (uncommitted lineage exists); " +
         "resume or discard it before compacting")
-    // Three phases, each fanned out on a FIXED pool (bounded — a
-    // 10^5-partition table must not spawn 10^5 threads):
+    // Three phases, each fanned out through [[DriverFanOut]] at
+    // min(16, cores / 2) (bounded — a 10^5-partition table must not
+    // spawn 10^5 threads):
     //   1. classify every (partition, table) from its parquet footers
     //      (driver IO only): KEEP by reference (already packed), GROUP
     //      (packs into ONE file — the dominant debris shape), or SOLO
@@ -1284,33 +1176,10 @@ class IceLite(val root: String) extends TableIO {
     //      the new snapshot's table dir — so 10^5 tiny partitions cost
     //      ~one job, not 10^5 job round-trips (the r6 sequential loop,
     //      and still the per-partition jobs of the first r7 cut). SOLO
-    //      rewrites stay individual jobs, fanned out on the pool.
+    //      rewrites stay individual jobs, fanned out.
     //   3. per-partition lineage records from the new footers.
-    // Local properties (job group etc.) are re-applied inside pool
-    // tasks that run Spark jobs, as in commitImpl.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val sc = spark.sparkContext
-    val propKeys = Seq("spark.jobGroup.id", "spark.job.description",
-      "spark.job.interruptOnCancel", "spark.scheduler.pool")
-    val props = propKeys.map(k => k -> sc.getLocalProperty(k))
-    def withProps[A](f: => A): A = {
-      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      f
-    }
-    val parallelism =
-      math.max(1, math.min(16, Runtime.getRuntime.availableProcessors / 2))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    // settle EVERY future (success or failure) before returning: a
-    // fail-fast Await would leave queued rewrites running in the
-    // background, racing a subsequent discardInProgress and re-creating
-    // records after the discard — so wait for all, then surface the
-    // first failure
-    def settleAll[A](work: Seq[Future[A]]): Seq[A] =
-      Await.result(
-        Future.sequence(work.map(_.transform(scala.util.Success(_)))),
-        Duration.Inf).map(_.get)
+    // Each phase settles every task before surfacing the first failure,
+    // so no rewrite races a later discardInProgress.
     val parts = snapshotParts(snap)
     // op marker FIRST (before any record lands): one O(1) probe tells a
     // resuming ingest that this in-progress state belongs to a
@@ -1319,100 +1188,85 @@ class IceLite(val root: String) extends TableIO {
     atomicWrite(lineageDir(newSnap).resolve(IceLite.OpMarker), "compact")
     case class Item(part: String, table: String, src: Long,
         before: TableFooter, packed: Int, era: Option[String])
-    try {
-      // phase 1: classify (parallel driver file IO, zero Spark jobs)
-      val classified: Seq[(String, JValue, Seq[Item])] =
-        settleAll(parts.map { part =>
-          Future {
-            val doc = lineageDoc(snap, part).getOrElse(
-              sys.error(s"snapshot $snap part '$part' has no lineage record"))
-            val items = (doc \ "tables").extract[Seq[String]].map { table =>
-              val src = dataSnapOf(snap, part, table)
-              val before = footerStats(spark, partDataDir(src, table, part))
-              val packed = math.max(1L,
-                (before.bytes + targetFileBytes - 1) / targetFileBytes).toInt
-              Item(part, table, src, before, packed,
-                (doc \ "schemas" \ table).extractOpt[String])
-            }
-            (part, doc, items)
-          }
-        })
-      val allItems = classified.flatMap(_._3)
-      // phase 2a: grouped single-job rewrites (sequential across the few
-      // buckets — each is one multi-partition Spark job). The SCHEMA ERA
-      // is part of the group key: one spark.read over mixed-era
-      // partitions would materialize every row under whichever schema
-      // inference picked, silently dropping a newer era's column from
-      // the rewritten bytes while the carried ledger still claims it
-      // (caught by the round-7 model check). Era-less legacy records
-      // group together under a mergeSchema read — lossless, at the cost
-      // of widening those rows to the merged shape.
-      val grouped = allItems
-        .filter(i => i.packed == 1 && i.before.files > 1)
-        .groupBy(i => (i.table, i.src, i.era)).toSeq.sortBy(_._1)
-      grouped.foreach { case ((table, src, era), items) =>
-        withProps {
-          val n = math.max(1, math.min(items.size,
-            sc.defaultParallelism * 2))
-          readDirsAt(spark, src, table, items.map(_.part),
-            if (era.isEmpty) Map("mergeSchema" -> "true")
-            else Map.empty[String, String])
-            .repartition(n, org.apache.spark.sql.functions.col("part"))
-            .write.mode("append").partitionBy("part")
-            .parquet(p("data", s"snap=$newSnap", enc(table)).toString)
+    // phase 1: classify (parallel driver file IO, zero Spark jobs)
+    val classified: Seq[(String, JValue, Seq[Item])] =
+      DriverFanOut(spark, IceLite.RewriteWidth, parts) { part =>
+        val doc = lineageDoc(snap, part).getOrElse(
+          sys.error(s"snapshot $snap part '$part' has no lineage record"))
+        val items = (doc \ "tables").extract[Seq[String]].map { table =>
+          val src = dataSnapOf(snap, part, table)
+          val before = footerStats(spark, partDataDir(src, table, part))
+          val packed = math.max(1L,
+            (before.bytes + targetFileBytes - 1) / targetFileBytes).toInt
+          Item(part, table, src, before, packed,
+            (doc \ "schemas" \ table).extractOpt[String])
         }
-        // normalize the emitted dir names to [[enc]]'s exact form:
-        // Spark's escapePathName covers a slightly different char set
-        // (e.g. it leaves '+' raw), and partDataDir must resolve every
-        // partition. Both escapings are plain per-char %XX, so [[dec]]
-        // round-trips either; rename whatever differs.
-        val tdir = p("data", s"snap=$newSnap", enc(table))
-        withList(tdir)(_.toSeq).foreach { d =>
-          val name = d.getFileName.toString
-          if (name.startsWith("part=")) {
-            val expected = s"part=${enc(dec(name.stripPrefix("part=")))}"
-            if (name != expected)
-              Files.move(d, d.resolveSibling(expected),
-                StandardCopyOption.ATOMIC_MOVE)
-          }
+        (part, doc, items)
+      }
+    val allItems = classified.flatMap(_._3)
+    // phase 2a: grouped single-job rewrites (sequential across the few
+    // buckets — each is one multi-partition Spark job). The SCHEMA ERA
+    // is part of the group key: one spark.read over mixed-era
+    // partitions would materialize every row under whichever schema
+    // inference picked, silently dropping a newer era's column from
+    // the rewritten bytes while the carried ledger still claims it
+    // (caught by the round-7 model check). Era-less legacy records
+    // group together under a mergeSchema read — lossless, at the cost
+    // of widening those rows to the merged shape.
+    val grouped = allItems
+      .filter(i => i.packed == 1 && i.before.files > 1)
+      .groupBy(i => (i.table, i.src, i.era)).toSeq.sortBy(_._1)
+    grouped.foreach { case ((table, src, era), items) =>
+      val n = math.max(1, math.min(items.size,
+        spark.sparkContext.defaultParallelism * 2))
+      readDirsAt(spark, src, table, items.map(_.part),
+        if (era.isEmpty) Map("mergeSchema" -> "true")
+        else Map.empty[String, String])
+        .repartition(n, org.apache.spark.sql.functions.col("part"))
+        .write.mode("append").partitionBy("part")
+        .parquet(p("data", s"snap=$newSnap", enc(table)).toString)
+      // normalize the emitted dir names to [[enc]]'s exact form:
+      // Spark's escapePathName covers a slightly different char set
+      // (e.g. it leaves '+' raw), and partDataDir must resolve every
+      // partition. Both escapings are plain per-char %XX, so [[dec]]
+      // round-trips either; rename whatever differs.
+      val tdir = p("data", s"snap=$newSnap", enc(table))
+      withList(tdir)(_.toSeq).foreach { d =>
+        val name = d.getFileName.toString
+        if (name.startsWith("part=")) {
+          val expected = s"part=${enc(dec(name.stripPrefix("part=")))}"
+          if (name != expected)
+            Files.move(d, d.resolveSibling(expected),
+              StandardCopyOption.ATOMIC_MOVE)
         }
       }
-      // phase 2b: solo multi-file rewrites, one job each, pool-parallel
-      settleAll(allItems
-        .filter(i => i.packed > 1 && i.packed < i.before.files)
-        .map { i =>
-          Future {
-            withProps {
-              val dst = partDataDir(newSnap, i.table, i.part)
-              spark.read.parquet(partDataDir(i.src, i.table, i.part))
-                .coalesce(i.packed).write.mode("overwrite").parquet(dst)
-            }
-          }
-        })
-      // phase 3: stats from the new footers + lineage records (parallel
-      // driver IO)
-      settleAll(classified.map { case (part, doc, items) =>
-        Future {
-          val footers = items.map { i =>
-            if (i.packed < i.before.files)
-              (i.table,
-                footerStats(spark, partDataDir(newSnap, i.table, i.part)),
-                newSnap)
-            else (i.table, i.before, i.src)
-          }
-          val stats = footers.map { case (t, tf, _) => t -> tf }.toMap
-          val dataSnap =
-            footers.collect { case (t, _, s) if s != newSnap => t -> s }.toMap
-          // compaction never changes the logical schema: carry the
-          // source record's per-table schema ledger forward verbatim
-          atomicWrite(lineageDir(newSnap).resolve(s"${enc(part)}.json"),
-            JsonMethods.compact(JsonMethods.render(lineageJson(
-              newSnap, part, (doc \ "rows").extract[Long], stats, dataSnap,
-              "compact", None, schemasOf(doc)))))
-        }
-      })
-      ()
-    } finally { pool.shutdown(); () }
+    }
+    // phase 2b: solo multi-file rewrites, one job each, fanned out
+    DriverFanOut(spark, IceLite.RewriteWidth,
+        allItems.filter(i => i.packed > 1 && i.packed < i.before.files)) { i =>
+      spark.read.parquet(partDataDir(i.src, i.table, i.part))
+        .coalesce(i.packed).write.mode("overwrite")
+        .parquet(partDataDir(newSnap, i.table, i.part))
+    }
+    // phase 3: stats from the new footers + lineage records (parallel
+    // driver IO)
+    DriverFanOut(spark, IceLite.RewriteWidth, classified) {
+        case (part, doc, items) =>
+      val footers = items.map { i =>
+        if (i.packed < i.before.files)
+          (i.table,
+            footerStats(spark, partDataDir(newSnap, i.table, i.part)),
+            newSnap)
+        else (i.table, i.before, i.src)
+      }
+      val stats = footers.map { case (t, tf, _) => t -> tf }.toMap
+      val dataSnap =
+        footers.collect { case (t, _, s) if s != newSnap => t -> s }.toMap
+      // compaction never changes the logical schema: carry the
+      // source record's per-table schema ledger forward verbatim
+      writeLineage(newSnap, part, (doc \ "rows").extract[Long], stats,
+        dataSnap, "compact", None, schemasOf(doc))
+    }
     // the marker stays until the lineage dir is expired: once the
     // snapshot commits nothing consults it (deleting it before the
     // commit would open a crash window where compact records lose
@@ -1456,67 +1310,43 @@ class IceLite(val root: String) extends TableIO {
       s"snapshot $newSnap is in progress (uncommitted lineage exists); " +
         "resume or discard it before deleting")
     atomicWrite(lineageDir(newSnap).resolve(IceLite.OpMarker), "delete")
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val sc = spark.sparkContext
-    val propKeys = Seq("spark.jobGroup.id", "spark.job.description",
-      "spark.job.interruptOnCancel", "spark.scheduler.pool")
-    val props = propKeys.map(k => k -> sc.getLocalProperty(k))
-    def withProps[A](f: => A): A = {
-      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      f
-    }
-    val parallelism =
-      math.max(1, math.min(16, Runtime.getRuntime.availableProcessors / 2))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val parts = snapshotParts(snap)
-    try {
-      val work: Seq[Future[Unit]] = parts.map { part =>
-        Future {
-          val doc = lineageDoc(snap, part).getOrElse(
-            sys.error(s"snapshot $snap part '$part' has no lineage record"))
-          val tables = (doc \ "tables").extract[Seq[String]]
-          val mayMatch = tables.contains(table) &&
-            statsOverlap(partStats(snap, part, table), prunePreds)
-          // pruned-out partition: NO new record — commitSnapshot
-          // inherits the parent's manifest doc by reference
-          if (mayMatch) {
-            val src = dataSnapOf(snap, part, table)
-            val dst = partDataDir(newSnap, table, part)
-            val kept = spark.read.parquet(partDataDir(src, table, part))
-              .filter(not(coalesce(pred, lit(false))))
-            withProps { kept.write.mode("overwrite").parquet(dst) }
-            // a delete that empties the partition can write ZERO data
-            // files (nothing for any task to emit) — pin one empty
-            // schema-bearing file so readers of the new snapshot never
-            // hit a file-less directory
-            if (footerStats(spark, dst).files == 0) withProps {
-              kept.limit(0).repartition(1).write.mode("overwrite").parquet(dst)
-            }
-            val footers = tables.map { t =>
-              if (t == table) (t, footerStats(spark, dst), newSnap)
-              else {
-                val s0 = dataSnapOf(snap, part, t)
-                (t, footerStats(spark, partDataDir(s0, t, part)), s0)
-              }
-            }
-            val stats = footers.map { case (t, tf, _) => t -> tf }.toMap
-            val dataSnap = footers
-              .collect { case (t, _, s0) if s0 != newSnap => t -> s0 }.toMap
-            atomicWrite(lineageDir(newSnap).resolve(s"${enc(part)}.json"),
-              JsonMethods.compact(JsonMethods.render(lineageJson(
-                newSnap, part, stats.valuesIterator.map(_.rows).sum, stats,
-                dataSnap, "delete", None, schemasOf(doc)))))
+    // every task settles before the first failure surfaces — no
+    // background rewrites racing a later discardInProgress
+    DriverFanOut(spark, IceLite.RewriteWidth, parts) { part =>
+      val doc = lineageDoc(snap, part).getOrElse(
+        sys.error(s"snapshot $snap part '$part' has no lineage record"))
+      val tables = (doc \ "tables").extract[Seq[String]]
+      val mayMatch = tables.contains(table) &&
+        statsOverlap(partStats(snap, part, table), prunePreds)
+      // pruned-out partition: NO new record — commitSnapshot
+      // inherits the parent's manifest doc by reference
+      if (mayMatch) {
+        val src = dataSnapOf(snap, part, table)
+        val dst = partDataDir(newSnap, table, part)
+        val kept = spark.read.parquet(partDataDir(src, table, part))
+          .filter(not(coalesce(pred, lit(false))))
+        kept.write.mode("overwrite").parquet(dst)
+        // a delete that empties the partition can write ZERO data
+        // files (nothing for any task to emit) — pin one empty
+        // schema-bearing file so readers of the new snapshot never
+        // hit a file-less directory
+        if (footerStats(spark, dst).files == 0)
+          kept.limit(0).repartition(1).write.mode("overwrite").parquet(dst)
+        val footers = tables.map { t =>
+          if (t == table) (t, footerStats(spark, dst), newSnap)
+          else {
+            val s0 = dataSnapOf(snap, part, t)
+            (t, footerStats(spark, partDataDir(s0, t, part)), s0)
           }
         }
+        val stats = footers.map { case (t, tf, _) => t -> tf }.toMap
+        val dataSnap = footers
+          .collect { case (t, _, s0) if s0 != newSnap => t -> s0 }.toMap
+        writeLineage(newSnap, part, stats.valuesIterator.map(_.rows).sum,
+          stats, dataSnap, "delete", None, schemasOf(doc))
       }
-      // settle everything before surfacing the first failure — no
-      // background rewrites racing a later discardInProgress
-      Await.result(
-        Future.sequence(work.map(_.transform(scala.util.Success(_)))),
-        Duration.Inf).foreach(_.get)
-    } finally { pool.shutdown(); () }
+    }
     commitSnapshot(newSnap, parts)
     newSnap
   }
@@ -1697,6 +1527,11 @@ object IceLite {
     * consolidates the list into fresh shards (Iceberg's manifest
     * rewrite) — bounds the read path of a long append chain. */
   private[io] val MaxManifests = 64
+
+  /** Fan-out width of the copy-on-write rewrites ([[IceLite.compactSnapshot]],
+    * [[IceLite.deleteWhere]]): half the driver's cores, at most 16. */
+  private val RewriteWidth =
+    math.max(1, math.min(16, Runtime.getRuntime.availableProcessors / 2))
 
   /** Marker file a non-ingest operation drops in its in-progress
     * lineage dir (named WITHOUT .json so completedParts never mistakes

@@ -33,18 +33,8 @@ object IncrementalProfile {
     * before sketches). */
   def partitionProfile(part: DataFrame, nullCols: Seq[String],
       rangeCols: Seq[String], distinctCols: Seq[String]): DataFrame = {
-    rangeCols.foreach { c =>
-      require(part.schema(c).dataType.isInstanceOf[NumericType],
-        s"range column '$c' is not numeric (min/max of strings does not " +
-          "merge through parquet footers consistently)")
-    }
-    val aggs: Seq[Column] =
-      nullCols.map(c =>
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"null_$c")) ++
-        rangeCols.flatMap(c => Seq(
-          min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) ++
-        distinctCols.map(c => hll_sketch_agg(col(c)).as(s"hll_$c"))
-    part.agg(count(lit(1)).as("n_rows"), aggs: _*)
+    val aggs = profileAggs(part, nullCols, rangeCols, distinctCols)
+    part.agg(aggs.head, aggs.tail: _*)
   }
 
   /** Every partition's [[partitionProfile]] row in ONE Spark job — the
@@ -57,19 +47,24 @@ object IncrementalProfile {
   def profilesByPartition(df: DataFrame, partCol: String,
       nullCols: Seq[String], rangeCols: Seq[String],
       distinctCols: Seq[String]): DataFrame = {
+    val aggs = profileAggs(df, nullCols, rangeCols, distinctCols)
+    df.groupBy(col(partCol)).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The aggregates of one [[partitionProfile]] row, `n_rows` first. */
+  private def profileAggs(df: DataFrame, nullCols: Seq[String],
+      rangeCols: Seq[String], distinctCols: Seq[String]): Seq[Column] = {
     rangeCols.foreach { c =>
       require(df.schema(c).dataType.isInstanceOf[NumericType],
         s"range column '$c' is not numeric (min/max of strings does not " +
           "merge through parquet footers consistently)")
     }
-    val aggs: Seq[Column] =
-      nullCols.map(c =>
+    count(lit(1)).as("n_rows") +:
+      (nullCols.map(c =>
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"null_$c")) ++
         rangeCols.flatMap(c => Seq(
           min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) ++
-        distinctCols.map(c => hll_sketch_agg(col(c)).as(s"hll_$c"))
-    df.groupBy(col(partCol))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
+        distinctCols.map(c => hll_sketch_agg(col(c)).as(s"hll_$c")))
   }
 
   /** Every partition's [[lengthHistogram]] in ONE Spark job: one

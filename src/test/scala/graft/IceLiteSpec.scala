@@ -930,14 +930,14 @@ class IceLiteSpec extends AnyFunSuite {
     assert(back2.filter(col("v") >= 10).count() === 0)
   }
 
-  test("ingestPartitionedBy lands value partitions from one job; hostile " +
-    "values round-trip Spark's path escaping") {
+  test("ingestPartitionedTables lands value partitions from one job; " +
+    "hostile values round-trip Spark's path escaping") {
     import spark.implicits._
     val root = freshRoot()
     val ice = new IceLite(root)
     val df = Seq((1L, "a b"), (2L, "a b"), (3L, "c/d"), (4L, "100"))
       .toDF("v", "g")
-    val parts = ice.ingestPartitionedBy(spark, 1L, "t", df, "g")
+    val parts = ice.ingestPartitionedTables(spark, 1L, "g", Map("t" -> df))
     assert(parts.toSet === Set("a b", "c/d", "100"))
     ice.commitSnapshot(1L, parts)
     val back = ice.readTable(spark, 1L, "t")

@@ -21,6 +21,11 @@ def load(path):
     return doc.get("parsed", doc)
 
 
+def fmt(v, spec):
+    """format(v, spec), or "n/a" for a field the artifact lacks."""
+    return "n/a" if v is None else format(v, spec)
+
+
 def main():
     run_path = sys.argv[1] if len(sys.argv) > 1 else "BENCH/last_run.json"
     prev_path = sys.argv[2] if len(sys.argv) > 2 else "BENCH_r07.json"
@@ -44,8 +49,9 @@ def main():
         f"recall {cur.get('recall', {})}.")
     if sent:
         lines.append(
-            f"- Tenancy sentinel: min {sent.get('min'):.3f}s, within-run "
-            f"spread {sent.get('spread'):.2f}x -> **drift {drift:.3f}** "
+            f"- Tenancy sentinel: min {fmt(sent.get('min'), '.3f')}s, within-run "
+            f"spread {fmt(sent.get('spread'), '.2f')}x -> "
+            f"**drift {fmt(drift, '.3f')}** "
             f"(1.0 = the round-7 calibration host state; <1 = faster host).")
     if prev:
         ptotal = prev["value"]
