@@ -559,7 +559,7 @@ object SparkEntry {
       }
       val schema = s.read.parquet(dir).schema
       // windowed-state sizing: a few thousand (window, type) keys —
-      // 8 state partitions, not the batch default of 32 (each is a
+      // 4 state partitions, not the batch default of 32 (each is a
       // per-micro-batch state-store commit)
       val qname = "v_stream_window_sink"
       withShufflePartitions(s, 4) {

@@ -143,7 +143,12 @@ object Dedup {
     * quadratically inside buckets. The banding generalizes unchanged to
     * wider signatures (64-bit simhash + 8-bit bands is the production
     * shape); 16 bits is kept here because the oracle replays each bit
-    * test in SQL. */
+    * test in SQL.
+    *
+    * `idCol` must be unique in `df`: a pair is keyed by its two ids, so
+    * a duplicated id emits its pairs once per copy (duplicate output
+    * rows). Uniqueness is the caller's contract, not checked here —
+    * checking it would cost an extra Spark job on every call. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
     val bands = maxHamming + 1
@@ -221,7 +226,9 @@ object Dedup {
     * upstream, add bands with multiprobe, or cap buckets. Backed by the
     * codegen'd [[graft.expr.SimHash64]]; not DuckDB-replayable
     * (wrapping u64 arithmetic), so verified in ScalaTest against the
-    * all-pairs form instead of the oracle. */
+    * all-pairs form instead of the oracle. As with [[simhashPairs]],
+    * `idCol` must be unique in `df` (a duplicated id emits duplicate
+    * pairs); this is not checked, to spare a Spark job per call. */
   def simhashPairs64(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
     val bands = maxHamming + 1

@@ -688,66 +688,142 @@ class IceLite(val root: String) extends TableIO {
       Seq(s"parquet.bloom.filter.enabled#$c" -> "true") ++
         (if (writeOptions.contains(ndv)) Nil else Seq(ndv -> (1L << 17).toString))
     }
-    landStaged(spark, snap, "ingest", IceLite.BucketCol, Map(table -> routed),
+    landStaged(spark, snap, "ingest", IceLite.BucketCol,
+      Map(table -> clustered(spark, routed, IceLite.BucketCol)),
       Map(table -> df.schema.json), "bucket=" + _, writeOptions ++ bloomOptions)
   }
 
-  /** The staged landing behind every one-job ingest
-    * ([[ingestPartitionedTables]], [[ingestBucketed]], [[mergeRows]]).
-    * Each table is clustered by `partCol` (Iceberg's hash
-    * write-distribution: one task owns each value, so a partition gets
-    * one file instead of one per (task, value), and the write
-    * parallelizes across shuffle partitions even from a single input
-    * split) and written `partitionBy(partCol)` into its own staging dir,
-    * the tables as concurrent jobs. Each value's dirs are then RENAMED
-    * into their partition slots (same filesystem — O(1), no data copy)
-    * and ONE lineage record per partition lists every table present
-    * there, rows = the sum of their footer rows. Spark's dir-name
+  /** The staged landing behind every one-job commit
+    * ([[ingestPartitionedTables]], [[ingestBucketed]], [[mergeRows]],
+    * [[commitParts]]). Each table is written `partitionBy(partCol)` into
+    * its own staging dir, the tables as concurrent jobs; how a table is
+    * distributed over write tasks is the caller's choice (a clustering
+    * `repartition` gives one file per value, see [[clustered]]). Each
+    * value's dirs are then RENAMED into their partition slots (same
+    * filesystem — O(1), no data copy) and ONE lineage record per
+    * partition lists every table present there. Spark's dir-name
     * escaping round-trips through [[dec]] (both are plain per-char %XX);
     * `partOf` maps the decoded value to the part name. Partitions
     * already committed under `snap` are skipped (the resume path).
+    *
+    * Without `rows`, the partitions are the staged values, each lists
+    * the tables that have rows there, and its row count is the sum of
+    * their footer rows. With `rows`, its keys are the partitions: every
+    * table is landed in every one of them — as a zero-row file with the
+    * table's schema where the staged write left no rows, so the table
+    * still reads back — and `rows(part)` is the recorded row count.
     * Returns the landed part names, sorted. */
   private def landStaged(spark: SparkSession, snap: Long, op: String,
       partCol: String, tables: Map[String, DataFrame],
       schemas: Map[String, String], partOf: String => String,
-      writeOptions: Map[String, String] = Map.empty): Seq[String] = {
+      writeOptions: Map[String, String] = Map.empty,
+      rows: Option[Map[String, Long]] = None): Seq[String] = {
     val staged = tables.map { case (name, _) =>
       name -> p("tmp", s"stage-$snap-${enc(name)}")
     }
     staged.values.foreach(deleteRecursively)
-    val np = spark.conf.get("spark.sql.shuffle.partitions").toInt
     DriverFanOut(spark, 16, tables.toSeq) { case (name, df) =>
-      df.repartition(np, df(partCol)) // explicit N: a bare repartition(col)
-        .write.mode("overwrite").partitionBy(partCol) // is AQE-coalescible
+      df.write.mode("overwrite").partitionBy(partCol)
         .options(writeOptions)
         .parquet(staged(name).toString)
     }
-    val partDirs = staged.toSeq
+    val stagedDirs = staged.toSeq
       .flatMap { case (name, st) =>
         withList(st)(_.map(_.getFileName.toString)
           .filter(_.contains("=")).toSeq)
           .map(d => (partOf(dec(d.substring(d.indexOf('=') + 1))), name,
             st.resolve(d)))
       }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-    val landed = DriverFanOut(spark, 16, partDirs) { case (part, dirs) =>
+      .groupBy(_._1).map { case (part, ds) =>
+        part -> ds.map { case (_, name, src) => name -> src }.toMap
+      }
+    rows.foreach { r =>
+      val stray = stagedDirs.keySet -- r.keySet
+      require(stray.isEmpty, s"staged partitions ${stray.take(3)} are not " +
+        "among the partitions being committed")
+    }
+    val partNames = rows.fold(stagedDirs.keys.toSeq)(_.keys.toSeq).sorted
+    val landed = DriverFanOut(spark, 16, partNames) { part =>
+      val dirs = stagedDirs.getOrElse(part, Map.empty)
       if (isPartCompleted(snap, part))
-        dirs.foreach { case (_, _, src) => deleteRecursively(src) }
+        dirs.values.foreach(deleteRecursively)
       else {
-        val stats = dirs.map { case (_, name, src) =>
+        val names = rows.fold(dirs.keys.toSeq)(_ => tables.keys.toSeq)
+        val stats = names.map { name =>
           val dst = Paths.get(partDataDir(snap, name, part))
           deleteRecursively(dst) // a crashed move's partial slot
           Files.createDirectories(dst.getParent)
-          Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+          dirs.get(name) match {
+            case Some(src) => Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+            case None => writeEmptyParquet(spark, dst,
+              org.apache.spark.sql.types.DataType.fromJson(schemas(name))
+                .asInstanceOf[org.apache.spark.sql.types.StructType])
+          }
           name -> footerStats(spark, dst.toString)
         }.toMap
-        writeLineage(snap, part, stats.valuesIterator.map(_.rows).sum, stats,
+        writeLineage(snap, part,
+          rows.fold(stats.valuesIterator.map(_.rows).sum)(_(part)), stats,
           Map.empty, op, None, schemas.filter(s => stats.contains(s._1)))
       }
       part
     }
     staged.values.foreach(deleteRecursively)
+    // a landed commit leaves no staging root behind (another operation's
+    // staging dir may still be in it)
+    try Files.deleteIfExists(p("tmp"))
+    catch { case _: java.nio.file.DirectoryNotEmptyException => () }
     landed
+  }
+
+  /** `df` clustered by `partCol` for a [[landStaged]] write (Iceberg's
+    * hash write-distribution): one task owns each value, so a partition
+    * gets one file instead of one per (task, value), and the write
+    * parallelizes across shuffle partitions even from a single input
+    * split. */
+  private def clustered(spark: SparkSession, df: DataFrame,
+      partCol: String): DataFrame =
+    df.repartition( // explicit N: a bare repartition(col) is AQE-coalescible
+      spark.conf.get("spark.sql.shuffle.partitions").toInt, df(partCol))
+
+  /** A zero-row parquet file with `schema` in a new directory `dir`,
+    * written from the driver (no Spark job): what a Spark write of an
+    * empty frame leaves, Spark's schema metadata included. */
+  private def writeEmptyParquet(spark: SparkSession, dir: Path,
+      schema: org.apache.spark.sql.types.StructType): Unit = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetReadSupport, SparkToParquetSchemaConverter}
+    Files.createDirectories(dir)
+    val w = new org.apache.parquet.hadoop.ParquetFileWriter(
+      spark.sessionState.newHadoopConf(),
+      new SparkToParquetSchemaConverter(spark.sessionState.conf).convert(schema),
+      new org.apache.hadoop.fs.Path(dir.resolve("part-00000-empty.parquet").toString))
+    w.start()
+    w.end(Map(ParquetReadSupport.SPARK_METADATA_KEY -> schema.json).asJava)
+  }
+
+  /** The data schema of each table with the partition column removed —
+    * what a `partitionBy(partCol)` write leaves in its files. */
+  private def schemasWithout(partCol: String,
+      tables: Map[String, DataFrame]): Map[String, String] =
+    tables.map { case (name, df) =>
+      name -> org.apache.spark.sql.types
+        .StructType(df.schema.filterNot(_.name == partCol)).json
+    }
+
+  /** Commit a wave of partitions in a constant number of Spark jobs
+    * ([[TableIO.commitParts]]): one `partitionBy(partCol)` staging write
+    * per table through [[landStaged]], as given (no clustering
+    * exchange; a caller wanting one file per partition coalesces), then
+    * one lineage record per partition of `rows` with `rows(part)` as its
+    * row count. Every table is listed in every partition, with zero rows
+    * where it has none. `partCol` values must be non-null, non-empty
+    * part names: Spark writes both NULL and "" as its default partition,
+    * which matches no part of `rows` and is refused. */
+  def commitParts(snap: Long, partCol: String,
+      tables: Map[String, DataFrame], rows: Map[String, Long]): Unit = {
+    require(tables.nonEmpty, "commitParts needs at least one table")
+    landStaged(tables.values.head.sparkSession, snap, "ingest", partCol,
+      tables, schemasWithout(partCol, tables), identity, rows = Some(rows))
   }
 
   /** Ingest data and its per-partition stats tables (e.g. `__profile` /
@@ -775,11 +851,9 @@ class IceLite(val root: String) extends TableIO {
       require(df.columns.contains(partCol),
         s"table '$name' has no partition column '$partCol'")
     }
-    val schemas = tables.map { case (name, df) =>
-      name -> org.apache.spark.sql.types
-        .StructType(df.schema.filterNot(_.name == partCol)).json
-    }
-    landStaged(spark, snap, "ingest", partCol, tables, schemas, identity)
+    landStaged(spark, snap, "ingest", partCol,
+      tables.map { case (name, df) => name -> clustered(spark, df, partCol) },
+      schemasWithout(partCol, tables), identity)
   }
 
   /** MERGE / upsert by the bucket-spec key (Iceberg's MERGE INTO,
@@ -847,7 +921,8 @@ class IceLite(val root: String) extends TableIO {
             IceLite.bucketColumn(survivors(spec.column), spec.buckets))
           .unionByName(ub)
       }
-    landStaged(spark, newSnap, "merge", IceLite.BucketCol, Map(table -> merged),
+    landStaged(spark, newSnap, "merge", IceLite.BucketCol,
+      Map(table -> clustered(spark, merged, IceLite.BucketCol)),
       Map(table -> updates.schema.json), "bucket=" + _)
     commitSnapshot(newSnap,
       ((parts.toSet -- existingParts) ++ affectedParts).toSeq.sorted)

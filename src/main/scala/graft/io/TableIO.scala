@@ -7,11 +7,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * table format, and nothing else (SURVEY.md §7: "Keep it behind a
   * TableIO trait so a real Iceberg catalog is a drop-in later").
   *
-  * [[IceLite]] implements it over bare parquet + JSON manifests; an
-  * Iceberg-catalog implementation would map snapshots to Iceberg
-  * snapshots, `commitPartitionLazy` to an append + commit, and
-  * `completedParts` to manifest inspection, with no change to the
-  * engine's checkpoint/resume loop.
+  * The seam is one multi-partition commit: a run hands over all the
+  * partitions it commits at once ([[commitParts]]), as tables carrying
+  * a partition column, so committing costs a constant number of jobs
+  * however many partitions there are. [[IceLite]] implements it over
+  * bare parquet + JSON manifests; an Iceberg-catalog implementation
+  * would map snapshots to Iceberg snapshots, `commitParts` to one
+  * partitioned append, and `completedParts` to manifest inspection,
+  * with no change to the engine's checkpoint/resume loop.
   */
 trait TableIO {
   /** Id the NEXT run should use: one past the last committed snapshot,
@@ -29,11 +32,16 @@ trait TableIO {
     * (the default for formats that don't track it) means plain ingest. */
   def inProgressOp(snap: Long): Option[String] = None
 
-  /** Write one partition's output tables atomically-at-the-end: the
-    * partition is either fully committed (lineage record present) or
-    * absent; `rowCount` may run concurrently with the table writes. */
-  def commitPartitionLazy(snap: Long, part: String, rowCount: () => Long,
-      tables: Map[String, DataFrame]): Unit
+  /** Write the output tables of the partitions named by `rows`, each
+    * table carrying the part name in column `partCol` (dropped from the
+    * stored data, restored on read). Each partition is committed
+    * all-or-nothing: it is either fully committed (lineage record
+    * present) or absent. Every table is listed in every partition, with
+    * zero rows where it has none; `rows(part)` is the partition's input
+    * row count. Partitions already committed under `snap` are left
+    * untouched. */
+  def commitParts(snap: Long, partCol: String,
+      tables: Map[String, DataFrame], rows: Map[String, Long]): Unit
 
   /** Finalize the snapshot: manifest then current-pointer swap. */
   def commitSnapshot(snap: Long, parts: Seq[String]): Unit

@@ -211,6 +211,9 @@ object Referential {
   * mode) or HLL++ (scale mode), length min/max. One Aggregate node over
   * one scan; `exact=false` swaps COUNT(DISTINCT) for
   * approx_count_distinct so the plan needs no Expand at 100 TB.
+  * `groupBy` names a column to profile by: one row per (group, column),
+  * the group column first. HLL++ registers merge by max, so a group's
+  * `n_distinct` equals that of the group's rows profiled alone.
   */
 object Profile {
   /** Backtick-quote an identifier / single-quote a string literal for
@@ -220,7 +223,8 @@ object Profile {
   private[validate] def sqlStr(s: String): String =
     "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-  def columns(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
+  def columns(df: DataFrame, cols: Seq[String], exact: Boolean = true,
+      groupBy: Option[String] = None): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
     val aggs = cols.flatMap { c =>
       Seq(
@@ -233,22 +237,23 @@ object Profile {
         min(length(col(bq(c)))).cast(LongType).as(s"${c}__minl"),
         max(length(col(bq(c)))).cast(LongType).as(s"${c}__maxl"))
     }
-    val row = df.agg(count(lit(1)).as("__n"), aggs: _*)
+    val keys = groupBy.toSeq.map(c => col(bq(c)))
+    val row = df.groupBy(keys: _*).agg(count(lit(1)).as("__n"), aggs: _*)
     // identifiers/literals are quoted into the stack expr — a column
     // named `content-type` or `a.b` must not parse as arithmetic/field
     // access (lengthQuantiles documents the same hazard)
     val stackArgs = cols.map(c =>
       s"${sqlStr(c)}, ${bq(c + "__nn")}, ${bq(c + "__nd")}, " +
         s"${bq(c + "__minl")}, ${bq(c + "__maxl")}").mkString(", ")
-    row.select(col("__n"),
-        expr(s"stack(${cols.size}, $stackArgs) as (col_name, nn, nd, minl, maxl)"))
-      .select(
+    row.select(keys ++ Seq(col("__n"),
+        expr(s"stack(${cols.size}, $stackArgs) as (col_name, nn, nd, minl, maxl)")): _*)
+      .select(keys ++ Seq(
         col("col_name"),
         col("__n").cast(LongType).as("n_rows"),
         (col("__n") - col("nn")).cast(LongType).as("n_null"),
         col("nd").cast(LongType).as("n_distinct"),
         col("minl").as("min_len"),
-        col("maxl").as("max_len"))
+        col("maxl").as("max_len")): _*)
   }
 }
 

@@ -531,13 +531,15 @@ class IceLiteSpec extends AnyFunSuite {
       def nextSnapshotId: Long = committed.map(_._1 + 1).getOrElse(1L)
       def completedParts(snap: Long): Set[String] =
         parts.keys.collect { case (s, p) if s == snap => p }.toSet
-      def commitPartitionLazy(snap: Long, part: String, rowCount: () => Long,
-          tables: Map[String, org.apache.spark.sql.DataFrame]): Unit = {
-        rowCount() // exercised like the real one
-        parts((snap, part)) = tables.map { case (n, df) =>
-          n -> df.cache() // "write": pin the materialized result
+      def commitParts(snap: Long, partCol: String,
+          tables: Map[String, org.apache.spark.sql.DataFrame],
+          rows: Map[String, Long]): Unit =
+        rows.keys.foreach { part =>
+          parts((snap, part)) = tables.map { case (n, df) =>
+            // "write": pin the partition's materialized result
+            n -> df.filter(col(partCol) === part).drop(partCol).cache()
+          }
         }
-      }
       def commitSnapshot(snap: Long, ps: Seq[String]): Unit =
         committed = Some((snap, ps))
       def readTable(spark: org.apache.spark.sql.SparkSession, snap: Long,
