@@ -339,7 +339,7 @@ object ScalingBench {
            if (job == "validate") ""
            else "; this dedup figure is supplementary: the job is " +
              "memory-bus-bound at 16 threads on one box — see the " +
-             "BusProbe attribution in NOTES.md (a pure array exchange " +
+             "compute-vs-bus attribution in NOTES.md (a pure array exchange " +
              "ANTI-scales at 0.09 on this host while pure compute " +
              "scales at the CPU ceiling). Round-over-round the job got " +
              "strictly FASTER in absolute wall-clock at both levels " +

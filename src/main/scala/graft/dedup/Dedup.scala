@@ -217,9 +217,8 @@ object Dedup {
   /** 64-bit SimHash near-dup pairs — the corpus-scale variant (the
     * 16-bit space saturates ≈10^4 docs; see [[simhashPairs]]). Same
     * exact pigeonhole banding, maxHamming+1 bands over 64 bits
-    * (22/21/21 bits for ≤2). Measured capacity
-    * (graft.bench.SimhashCapacity, BENCH/NOTES.md): random band
-    * collisions follow the 3·n²/2^22 birthday floor — ~0.7
+    * (22/21/21 bits for ≤2). Measured capacity (BENCH/NOTES.md):
+    * random band collisions follow the 3·n²/2^22 birthday floor — ~0.7
     * candidates/doc at 10^6 docs, ~7 at 10^7, ~70 at 10^8 — so exact
     * 3-band blocking holds to ~10^7-10^8 docs (the candidate FILTER is
     * a cheap bit_count over ids+sigs); beyond that, run [[exact]]

@@ -15,7 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * small API that a real Iceberg catalog could replace drop-in.
   *
   * Commit protocol (single-writer):
-  *   1. partition data written under `data/snap=N/<table>/part=<p>/`
+  *   1. partition data staged under `tmp/`, then renamed into
+  *      `data/snap=N/<table>/part=<p>/` (copy-on-write compaction and
+  *      delete write their rewrites straight into the new snapshot)
   *   2. lineage record written via temp-file + atomic rename — a
   *      partition is "completed" iff its lineage record exists
   *   3. snapshot manifest `snapshots/vN.json` written last, then the
@@ -27,14 +29,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * atomic already.
   *
   * Fan-out rule: whenever the driver runs several Spark jobs or file
-  * moves at once (a commit's table writes and row count, the tables of
-  * a staged ingest and its partition landings, compaction and delete
-  * rewrites), it goes through [[DriverFanOut]] with a width fixed at the
-  * call site. Each call gets its own bounded pool, so nested fan-outs
-  * cannot deadlock; every worker carries the caller's job group; and
-  * every task settles before the first failure is rethrown, so no write
-  * is still running into a partition directory when the caller resumes,
-  * retries or discards.
+  * moves at once (the tables of a staged landing and its partition
+  * renames, compaction and delete rewrites), it goes through
+  * [[DriverFanOut]] with a width fixed at the call site. Each call gets
+  * its own bounded pool, so nested fan-outs cannot deadlock; every
+  * worker carries the caller's job group; and every task settles before
+  * the first failure is rethrown, so no write is still running into a
+  * partition directory when the caller resumes, retries or discards.
   *
   * Layout:
   * {{{
@@ -45,6 +46,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   manifests/m3-0.json           // shard: {"<part>": lineage doc, ...}
   *   lineage/snap=3/<part>.json    // {"part":p,"rows":n,"tables":[...]}
   *   data/snap=3/verdicts/part=p/  // parquet
+  *   tmp/stage-3-<nonce>/          // a landing's staging (transient)
   * }}}
   */
 class IceLite(val root: String) extends TableIO {
@@ -147,33 +149,23 @@ class IceLite(val root: String) extends TableIO {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Write one partition's output tables, then its lineage record.
-    * The lineage rename is the commit point. The record carries
-    * per-table NUMERIC column ranges harvested from the just-written
-    * parquet FOOTERS (no data re-read — the same place Iceberg's
-    * manifests get their lower/upper bounds), which
-    * [[readTablePruned]] uses to skip whole partitions at scan time. */
+  /** Commit one partition's output tables as a one-part [[landStaged]]
+    * with `rowCount` as its recorded row count; a partition already
+    * committed under `snap` is skipped, not overwritten. The record
+    * carries per-table NUMERIC column ranges from the landed parquet
+    * FOOTERS (no data re-read — where Iceberg's manifests get their
+    * lower/upper bounds), which [[readTablePruned]] prunes on. */
   def commitPartition(snap: Long, part: String, rowCount: Long,
       tables: Map[String, DataFrame]): Unit =
-    commitPartitionLazy(snap, part, () => rowCount, tables)
+    commitOnePart(snap, part, Some(rowCount), tables, None)
 
-  /** [[commitPartition]] with the table writes AND the row count run as
-    * CONCURRENT Spark jobs (the Spark scheduler interleaves them across
-    * the executor pool — a partition's tables are independent until the
-    * lineage record, and serializing 4 small jobs wastes half the
-    * commit in scheduling gaps). The lineage rename still happens only
-    * after every job finished, so the crash/resume contract is
-    * unchanged: a partition is committed all-or-nothing. */
-  def commitPartitionLazy(snap: Long, part: String, rowCount: () => Long,
-      tables: Map[String, DataFrame]): Unit =
-    commitImpl(snap, part, Some(rowCount), tables)
-
-  /** [[commitPartitionLazy]] with the partition row count taken from
-    * the WRITTEN tables' parquet footers (their total, exact, zero
-    * extra jobs) — for commits whose natural row count is the committed
+  /** [[commitPartition]] with the partition row count taken from the
+    * landed tables' parquet footers (their total, exact, zero extra
+    * jobs) — for commits whose natural row count is the committed
     * output itself, e.g. a streaming committer landing one violations
-    * table per micro-batch: a `() => batch.count()` thunk there would
-    * re-execute the whole unpersisted batch plan a second time.
+    * table per micro-batch, where a count would re-execute the whole
+    * unpersisted batch plan a second time. Also a one-part
+    * [[landStaged]] that skips an already-committed partition.
     * `srcFiles` optionally records the input files the commit was
     * derived from — the streaming committer's replay-safety witness
     * ([[graft.streaming.StreamValidate.toIceLite]]): a replayed batch
@@ -183,30 +175,20 @@ class IceLite(val root: String) extends TableIO {
   def commitPartitionFromFooters(snap: Long, part: String,
       tables: Map[String, DataFrame],
       srcFiles: Option[Seq[String]] = None): Unit =
-    commitImpl(snap, part, None, tables, srcFiles)
+    commitOnePart(snap, part, None, tables, srcFiles)
 
-  private def commitImpl(snap: Long, part: String,
-      rowCount: Option[() => Long], tables: Map[String, DataFrame],
-      srcFiles: Option[Seq[String]] = None): Unit = {
-    val spark = tables.values.headOption.fold(SparkSession.active)(_.sparkSession)
-    // the row count (Left) runs as one more task beside the table writes
-    val done = DriverFanOut(spark, tables.size + 1,
-        rowCount.map(Left(_)).toSeq ++ tables.toSeq.map(Right(_))) {
-      case Left(rc) => Left(rc())
-      case Right((name, df)) =>
-        val dir = partDataDir(snap, name, part)
-        df.write.mode("overwrite").parquet(dir)
-        Right(name -> footerStats(df.sparkSession, dir))
-    }
-    val stats = done.collect { case Right(s) => s }.toMap
-    val nRows = done.collectFirst { case Left(n) => n }
-      .getOrElse(stats.valuesIterator.map(_.rows).sum)
-    // the written files' exact Spark schema, recorded per table — the
-    // schema-evolution ledger [[readTableEvolved]] groups partitions by
-    // (old partitions keep their era's schema; reads reconcile)
-    val schemas = tables.map { case (n, df) => n -> df.schema.json }
-    writeLineage(snap, part, nRows, stats, Map.empty, "ingest", srcFiles,
-      schemas)
+  /** One part through [[landStaged]], keyed by the reserved column
+    * [[IceLite.PartCol]]: a table's own columns are stored as given. */
+  private def commitOnePart(snap: Long, part: String, rowCount: Option[Long],
+      tables: Map[String, DataFrame], srcFiles: Option[Seq[String]]): Unit = {
+    import org.apache.spark.sql.functions.lit
+    for ((name, df) <- tables) require(!df.columns.contains(IceLite.PartCol),
+      s"table '$name' already has a ${IceLite.PartCol} column")
+    landStaged(tables.values.headOption.fold(SparkSession.active)(_.sparkSession),
+      snap, "ingest", IceLite.PartCol,
+      tables.map { case (name, df) => name -> df.withColumn(IceLite.PartCol, lit(part)) },
+      tables.map { case (name, df) => name -> df.schema.json }, identity,
+      parts = Some(Map(part -> rowCount)), srcFiles = srcFiles)
   }
 
   /** Write one partition's lineage record: the commit point of every
@@ -255,39 +237,27 @@ class IceLite(val root: String) extends TableIO {
       JsonMethods.compact(JsonMethods.render(doc)))
   }
 
-  /** The operation that produced a partition's lineage record ("ingest",
-    * "compact") — the per-record audit tag; the O(1) resume guard is
-    * [[inProgressOp]]. None for records written before op tagging. */
-  def partOp(snap: Long, part: String): Option[String] =
-    lineageDoc(snap, part).flatMap(d => (d \ "op").extractOpt[String])
-
   /** The source files a partition's commit recorded (streaming
     * committer replay witness); None when the record carries none. */
   def partSourceFiles(snap: Long, part: String): Option[Seq[String]] =
-    lineageDoc(snap, part).flatMap(d => (d \ "srcFiles").extractOpt[Seq[String]])
+    lineageDoc(snap, part).map(_ \ "srcFiles").collect {
+      case fs: JArray => fs.extract[Seq[String]]
+    }
 
   /** Integral footer bounds above 2^53 can round toward the INTERIOR
     * when narrowed to Double (min up / max down), which would let
     * [[readTablePruned]] drop a partition that still holds in-range
     * rows. Round-to-nearest is off by at most half an ulp, so one ulp
-    * outward restores the "pruning is never lossy" invariant; the
-    * `< 2^63` guard catches Long.MaxValue, where toLong saturates and
-    * the equality test would falsely report an exact conversion. */
-  private def widenLo(n: Number): Double = n match {
+    * outward (`outward` = nextDown for a min, nextUp for a max)
+    * restores the "pruning is never lossy" invariant; the `< 2^63`
+    * guard catches Long.MaxValue, where toLong saturates and the
+    * equality test would falsely report an exact conversion. */
+  private def widen(n: Number, outward: Double => Double): Double = n match {
     case l: java.lang.Long =>
       val d = l.doubleValue
       if (d >= Long.MinValue.toDouble && d < Long.MaxValue.toDouble &&
         d.toLong == l.longValue) d
-      else math.nextDown(d)
-    case _ => n.doubleValue
-  }
-
-  private def widenHi(n: Number): Double = n match {
-    case l: java.lang.Long =>
-      val d = l.doubleValue
-      if (d >= Long.MinValue.toDouble && d < Long.MaxValue.toDouble &&
-        d.toLong == l.longValue) d
-      else math.nextUp(d)
+      else outward(d)
     case _ => n.doubleValue
   }
 
@@ -325,7 +295,7 @@ class IceLite(val root: String) extends TableIO {
             (st.genericGetMin, st.genericGetMax) match {
               case (mn: Number, mx: Number) =>
                 val name = col.getPath.toDotString
-                val (mnD, mxD) = (widenLo(mn), widenHi(mx))
+                val (mnD, mxD) = (widen(mn, math.nextDown), widen(mx, math.nextUp))
                 acc(name) = acc.get(name) match {
                   case Some((a, b)) => (math.min(a, mnD), math.max(b, mxD))
                   case None => (mnD, mxD)
@@ -475,7 +445,8 @@ class IceLite(val root: String) extends TableIO {
     * docs so no driver parse is ever proportional to the table; a chain
     * of appends that accumulates more than [[IceLite.MaxManifests]]
     * shards is consolidated into fresh shards (Iceberg's manifest
-    * rewrite), re-amortizing the read path. */
+    * rewrite), re-amortizing the read path. Staging dirs that failed
+    * landings under `snap` left behind are removed last. */
   def commitSnapshot(snap: Long, parts: Seq[String]): Unit = {
     val parent = currentSnapshotId.getOrElse(0L)
     val sorted = parts.sorted.toList
@@ -521,6 +492,7 @@ class IceLite(val root: String) extends TableIO {
       JsonMethods.compact(JsonMethods.render(doc)))
     atomicWrite(p("_current"), snap.toString)
     manifestCache.remove(snap)
+    dropStaging(_.startsWith(s"stage-$snap-"))
   }
 
   def snapshotParts(snap: Long): Seq[String] = {
@@ -558,12 +530,6 @@ class IceLite(val root: String) extends TableIO {
     else readDirs(spark, snap, table, kept)
   }
 
-  /** A partition's lineage record with the snapshot id field removed —
-    * equal fingerprints mean the same row count and the same per-table
-    * per-column footer min/max. Used to detect RECOMMITTED partitions
-    * between snapshots; a content change that preserves every one of
-    * those is indistinguishable (documented residual of the stats-level
-    * diff — Iceberg proper diffs manifests at file granularity). */
   /** Fields that say WHERE/HOW a record was produced, not WHAT it
     * contains — excluded from the fingerprint so relocation
     * (compaction's dataSnap), the producing operation, the streaming
@@ -578,6 +544,12 @@ class IceLite(val root: String) extends TableIO {
   private val fingerprintExcluded =
     Set("snapshot", "dataSnap", "op", "srcFiles", "tableRows", "schemas")
 
+  /** A partition's lineage record without its [[fingerprintExcluded]] fields —
+    * equal fingerprints mean the same row count and the same per-table
+    * per-column footer min/max. Used to detect RECOMMITTED partitions
+    * between snapshots; a content change that preserves every one of
+    * those is indistinguishable (documented residual of the stats-level
+    * diff — Iceberg proper diffs manifests at file granularity). */
   private def partFingerprint(snap: Long, part: String): Option[String] =
     lineageDoc(snap, part).collect {
       case JObject(fields) => JsonMethods.compact(JsonMethods.render(
@@ -631,9 +603,7 @@ class IceLite(val root: String) extends TableIO {
         // existing rows were never routed, so bucket-pruned reads would
         // silently miss them and merges would leave stale duplicates
         currentSnapshotId.foreach { cur =>
-          val unrouted = snapshotParts(cur).filter(part =>
-            !part.startsWith("bucket=") && lineageDoc(cur, part).exists(d =>
-              (d \ "tables").extract[Seq[String]].contains(table)))
+          val unrouted = unroutedParts(cur, snapshotParts(cur), table)
           require(unrouted.isEmpty,
             s"table '$table' already has non-bucket partitions " +
               s"${unrouted.take(3)}…; a bucket spec must precede its data")
@@ -643,6 +613,14 @@ class IceLite(val root: String) extends TableIO {
             "column" -> JString(column), "buckets" -> JInt(buckets)))))
     }
   }
+
+  /** Partitions among `parts` of `snap` that hold `table` but were never
+    * bucket-routed. */
+  private def unroutedParts(snap: Long, parts: Seq[String],
+      table: String): Seq[String] =
+    parts.filter(part => !part.startsWith("bucket=") &&
+      lineageDoc(snap, part).exists(d =>
+        (d \ "tables").extract[Seq[String]].contains(table)))
 
   /** The table's declared bucket spec, if any. */
   def bucketSpec(table: String): Option[IceLite.BucketSpec] = {
@@ -693,35 +671,44 @@ class IceLite(val root: String) extends TableIO {
       Map(table -> df.schema.json), "bucket=" + _, writeOptions ++ bloomOptions)
   }
 
-  /** The staged landing behind every one-job commit
-    * ([[ingestPartitionedTables]], [[ingestBucketed]], [[mergeRows]],
-    * [[commitParts]]). Each table is written `partitionBy(partCol)` into
-    * its own staging dir, the tables as concurrent jobs; how a table is
-    * distributed over write tasks is the caller's choice (a clustering
-    * `repartition` gives one file per value, see [[clustered]]). Each
-    * value's dirs are then RENAMED into their partition slots (same
-    * filesystem — O(1), no data copy) and ONE lineage record per
-    * partition lists every table present there. Spark's dir-name
-    * escaping round-trips through [[dec]] (both are plain per-char %XX);
-    * `partOf` maps the decoded value to the part name. Partitions
-    * already committed under `snap` are skipped (the resume path).
+  /** The one landing behind every ingest-kind partition commit. Each
+    * table is written `partitionBy(partCol)` into this call's own
+    * staging dir (`tmp/stage-<snap>-<nonce>/<table>`: concurrent
+    * landings under one snapshot never share one), the tables as
+    * concurrent jobs; how a table is distributed over write tasks is the
+    * caller's choice (see [[clustered]]). Each value's dirs are then
+    * RENAMED into their partition slots (same filesystem — O(1), no data
+    * copy) and ONE lineage record per partition lists every table
+    * present there. Spark's dir-name escaping round-trips through
+    * [[dec]] (both are plain per-char %XX); `partOf` maps the decoded
+    * value to the part name. Partitions already committed under `snap`
+    * are skipped (the resume path). A failed write's staging stays until
+    * [[discardInProgress]] or [[commitSnapshot]] of `snap` sweeps it.
     *
-    * Without `rows`, the partitions are the staged values, each lists
+    * Without `parts`, the partitions are the staged values, each lists
     * the tables that have rows there, and its row count is the sum of
-    * their footer rows. With `rows`, its keys are the partitions: every
-    * table is landed in every one of them — as a zero-row file with the
-    * table's schema where the staged write left no rows, so the table
-    * still reads back — and `rows(part)` is the recorded row count.
-    * Returns the landed part names, sorted. */
+    * their footer rows. With `parts`, its keys are the partitions (an
+    * empty or NULL one is refused before any job: Spark writes both as
+    * its default partition): every table is landed in every one of them
+    * — as a zero-row file with the table's schema where the staged write
+    * left no rows — and its row count is the given one, else the footer
+    * sum. Every record carries `srcFiles`. Returns the landed parts,
+    * sorted. */
   private def landStaged(spark: SparkSession, snap: Long, op: String,
       partCol: String, tables: Map[String, DataFrame],
       schemas: Map[String, String], partOf: String => String,
       writeOptions: Map[String, String] = Map.empty,
-      rows: Option[Map[String, Long]] = None): Seq[String] = {
-    val staged = tables.map { case (name, _) =>
-      name -> p("tmp", s"stage-$snap-${enc(name)}")
+      parts: Option[Map[String, Option[Long]]] = None,
+      srcFiles: Option[Seq[String]] = None): Seq[String] = {
+    parts.foreach { ps =>
+      val bad = ps.keys.filter(part => part == null || part.isEmpty)
+      require(bad.isEmpty, "part names must be non-empty and non-NULL, got " +
+        bad.map(b => if (b == null) "NULL" else "\"\"").mkString(", ") +
+        ": Spark writes both as its default partition")
     }
-    staged.values.foreach(deleteRecursively)
+    val stage = p("tmp", s"stage-$snap-${java.util.UUID.randomUUID}")
+    IceLite.stagingLock.synchronized(Files.createDirectories(stage))
+    val staged = tables.map { case (name, _) => name -> stage.resolve(enc(name)) }
     DriverFanOut(spark, 16, tables.toSeq) { case (name, df) =>
       df.write.mode("overwrite").partitionBy(partCol)
         .options(writeOptions)
@@ -737,18 +724,16 @@ class IceLite(val root: String) extends TableIO {
       .groupBy(_._1).map { case (part, ds) =>
         part -> ds.map { case (_, name, src) => name -> src }.toMap
       }
-    rows.foreach { r =>
-      val stray = stagedDirs.keySet -- r.keySet
+    parts.foreach { ps =>
+      val stray = stagedDirs.keySet -- ps.keySet
       require(stray.isEmpty, s"staged partitions ${stray.take(3)} are not " +
         "among the partitions being committed")
     }
-    val partNames = rows.fold(stagedDirs.keys.toSeq)(_.keys.toSeq).sorted
+    val partNames = parts.fold(stagedDirs.keys.toSeq)(_.keys.toSeq).sorted
     val landed = DriverFanOut(spark, 16, partNames) { part =>
-      val dirs = stagedDirs.getOrElse(part, Map.empty)
-      if (isPartCompleted(snap, part))
-        dirs.values.foreach(deleteRecursively)
-      else {
-        val names = rows.fold(dirs.keys.toSeq)(_ => tables.keys.toSeq)
+      if (!isPartCompleted(snap, part)) {
+        val dirs = stagedDirs.getOrElse(part, Map.empty)
+        val names = parts.fold(dirs.keys.toSeq)(_ => tables.keys.toSeq)
         val stats = names.map { name =>
           val dst = Paths.get(partDataDir(snap, name, part))
           deleteRecursively(dst) // a crashed move's partial slot
@@ -762,18 +747,28 @@ class IceLite(val root: String) extends TableIO {
           name -> footerStats(spark, dst.toString)
         }.toMap
         writeLineage(snap, part,
-          rows.fold(stats.valuesIterator.map(_.rows).sum)(_(part)), stats,
-          Map.empty, op, None, schemas.filter(s => stats.contains(s._1)))
+          parts.flatMap(_(part)).getOrElse(stats.valuesIterator.map(_.rows).sum),
+          stats, Map.empty, op, srcFiles,
+          schemas.filter(s => stats.contains(s._1)))
       }
       part
     }
-    staged.values.foreach(deleteRecursively)
-    // a landed commit leaves no staging root behind (another operation's
-    // staging dir may still be in it)
-    try Files.deleteIfExists(p("tmp"))
-    catch { case _: java.nio.file.DirectoryNotEmptyException => () }
+    dropStaging(_ == stage.getFileName.toString)
     landed
   }
+
+  /** Delete the staging dirs `doomed` names, then `tmp/` if that leaves
+    * it empty (under the lock a landing creates its staging dir with). */
+  private def dropStaging(doomed: String => Boolean): Unit =
+    IceLite.stagingLock.synchronized {
+      val tmp = p("tmp")
+      if (Files.exists(tmp)) {
+        withList(tmp)(_.filter(d => doomed(d.getFileName.toString)).toSeq)
+          .foreach(deleteRecursively)
+        try Files.deleteIfExists(tmp)
+        catch { case _: java.nio.file.DirectoryNotEmptyException => () }
+      }
+    }
 
   /** `df` clustered by `partCol` for a [[landStaged]] write (Iceberg's
     * hash write-distribution): one task owns each value, so a partition
@@ -818,32 +813,28 @@ class IceLite(val root: String) extends TableIO {
     * row count. Every table is listed in every partition, with zero rows
     * where it has none. `partCol` values must be non-null, non-empty
     * part names: Spark writes both NULL and "" as its default partition,
-    * which matches no part of `rows` and is refused. */
+    * so such a key of `rows` or value in the data is refused. */
   def commitParts(snap: Long, partCol: String,
       tables: Map[String, DataFrame], rows: Map[String, Long]): Unit = {
     require(tables.nonEmpty, "commitParts needs at least one table")
     landStaged(tables.values.head.sparkSession, snap, "ingest", partCol,
-      tables, schemasWithout(partCol, tables), identity, rows = Some(rows))
+      tables, schemasWithout(partCol, tables), identity,
+      parts = Some(rows.map { case (part, n) => part -> Some(n) }))
   }
 
   /** Ingest data and its per-partition stats tables (e.g. `__profile` /
     * `__hist` rows from
     * [[graft.validate.IncrementalProfile.profilesByPartition]]) under
     * in-progress snapshot `snap`, partitioned by the VALUES of `partCol`,
-    * with a CONSTANT number of Spark jobs — one clustered `partitionBy`
-    * write per table through [[landStaged]] — and ONE lineage record per
-    * partition listing every table present there. This is the
-    * bulk-ingest shape VERDICT r7 named: per-partition stats must never
-    * cost one driver-sequential Spark job per partition; a
-    * `groupBy(partCol)` pass produces all partitions' stats rows in one
-    * job and this lands them next to their data. `partCol` is dropped
-    * from the written files (derivable from the partition name); the
-    * part name is the value's exact string form (NULL values land under
-    * Spark's default-partition name). Partition row count = the sum of
-    * its tables' footer rows (the [[commitPartitionFromFooters]]
-    * formula). A table with no rows for some partition value simply has
-    * no files there. Crash-resumable per partition like every commit.
-    * Returns the committed parts. */
+    * with a CONSTANT number of Spark jobs (one clustered [[landStaged]]
+    * write per table, never one job per partition) and ONE lineage
+    * record per partition listing every table present there. `partCol`
+    * is dropped from the written files; the part name is the value's
+    * exact string form (NULL values land under Spark's default-partition
+    * name). Partition row count = the sum of its tables' footer rows. A
+    * table with no rows for some partition value has no files there.
+    * Crash-resumable per partition like every commit. Returns the
+    * committed parts. */
   def ingestPartitionedTables(spark: SparkSession, snap: Long,
       partCol: String, tables: Map[String, DataFrame]): Seq[String] = {
     require(tables.nonEmpty, "ingestPartitionedTables needs at least one table")
@@ -872,12 +863,7 @@ class IceLite(val root: String) extends TableIO {
       updates: DataFrame): Long = {
     val spec = bucketSpec(table).getOrElse(
       sys.error(s"table '$table' has no bucket spec; mergeRows routes by it"))
-    val snap = currentSnapshotId.getOrElse(
-      sys.error("mergeRows needs a committed snapshot"))
-    val newSnap = nextSnapshotId
-    require(!Files.exists(lineageDir(newSnap)),
-      s"snapshot $newSnap is in progress (uncommitted lineage exists); " +
-        "resume or discard it before merging")
+    val (snap, newSnap) = rewriteIds("mergeRows")
     require(!updates.columns.contains(IceLite.BucketCol),
       s"updates already have a ${IceLite.BucketCol} column")
     atomicWrite(lineageDir(newSnap).resolve(IceLite.OpMarker), "merge")
@@ -889,9 +875,7 @@ class IceLite(val root: String) extends TableIO {
     val parts = snapshotParts(snap)
     // matched keys hiding in never-routed partitions would survive as
     // stale duplicates — refuse mixed layouts loudly
-    val unrouted = parts.filter(part =>
-      !part.startsWith("bucket=") && lineageDoc(snap, part).exists(d =>
-        (d \ "tables").extract[Seq[String]].contains(table)))
+    val unrouted = unroutedParts(snap, parts, table)
     require(unrouted.isEmpty,
       s"table '$table' has non-bucket partitions ${unrouted.take(3)}…; " +
         "mergeRows requires a fully bucket-routed table")
@@ -963,15 +947,15 @@ class IceLite(val root: String) extends TableIO {
 
   // ── schema evolution ──────────────────────────────────────────────
 
-  /** The recorded Spark schema (StructType json) of one partition's
-    * table files — the per-era ledger [[readTableEvolved]] reconciles.
-    * None for records written before schema capture (round 7). */
   /** hash → schema JSON; interned files are immutable, and without the
     * cache an evolved read over 10^5 partitions would re-read the same
     * few era files once per partition. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** The recorded Spark schema (StructType json) of one partition's
+    * table files — the per-era ledger [[readTableEvolved]] reconciles.
+    * None for records written before schema capture (round 7). */
   def partSchemaJson(snap: Long, part: String,
       table: String): Option[String] =
     lineageDoc(snap, part).flatMap(d =>
@@ -1163,7 +1147,8 @@ class IceLite(val root: String) extends TableIO {
     * on manifest-absence alone would be silent data loss); ids above
     * the current snapshot can't be referenced by anything, because
     * indirections only ever point backward at locations that were
-    * committed when the record was written. */
+    * committed when the record was written. Staging dirs left by failed
+    * landings under `snap` go with the rest. */
   def discardInProgress(snap: Long): Unit = {
     require(snap > currentSnapshotId.getOrElse(0L),
       s"snapshot $snap is not in progress (current or older): committed " +
@@ -1171,6 +1156,7 @@ class IceLite(val root: String) extends TableIO {
         "leftover data may still back retained snapshots")
     deleteRecursively(lineageDir(snap))
     deleteRecursively(p("data", s"snap=$snap"))
+    dropStaging(_.startsWith(s"stage-$snap-"))
   }
 
   /** Carry an UNCHANGED partition forward into a new snapshot without
@@ -1207,6 +1193,21 @@ class IceLite(val root: String) extends TableIO {
       s"snapshot $fromSnap has no lineage record for partition '$part'")
   }
 
+  /** The current snapshot and the new id copy-on-write operation `op`
+    * commits under. The new id is also the one a CRASHED ingest run
+    * resumes under: its lineage records (without a manifest) ARE the
+    * checkpoint, and rewriting over it would overwrite the crashed
+    * run's data and publish stale content under its id — refused. */
+  private def rewriteIds(op: String): (Long, Long) = {
+    val snap = currentSnapshotId.getOrElse(
+      sys.error(s"$op needs a committed snapshot"))
+    val newSnap = nextSnapshotId
+    require(!Files.exists(lineageDir(newSnap)),
+      s"snapshot $newSnap is in progress (uncommitted lineage exists); " +
+        s"resume or discard it before $op")
+    (snap, newSnap)
+  }
+
   /** Copy-on-write small-file compaction (Iceberg's
     * `rewrite_data_files`): bin-pack every (partition, table) whose
     * parquet files could pack into fewer `targetFileBytes`-sized files,
@@ -1227,16 +1228,7 @@ class IceLite(val root: String) extends TableIO {
     * an empty diff across a compaction. Returns the new snapshot id. */
   def compactSnapshot(spark: SparkSession,
       targetFileBytes: Long = 128L << 20): Long = {
-    val snap = currentSnapshotId.getOrElse(
-      sys.error("compactSnapshot needs a committed snapshot"))
-    val newSnap = nextSnapshotId
-    // nextSnapshotId is also the id a CRASHED ingest run resumes under:
-    // its lineage records (without a manifest) ARE the checkpoint.
-    // Compacting over it would overwrite the crashed run's data and
-    // publish stale content under its id — refuse instead.
-    require(!Files.exists(lineageDir(newSnap)),
-      s"snapshot $newSnap is in progress (uncommitted lineage exists); " +
-        "resume or discard it before compacting")
+    val (snap, newSnap) = rewriteIds("compactSnapshot")
     // Three phases, each fanned out through [[DriverFanOut]] at
     // min(16, cores / 2) (bounded — a 10^5-partition table must not
     // spawn 10^5 threads):
@@ -1328,19 +1320,12 @@ class IceLite(val root: String) extends TableIO {
     DriverFanOut(spark, IceLite.RewriteWidth, classified) {
         case (part, doc, items) =>
       val footers = items.map { i =>
-        if (i.packed < i.before.files)
-          (i.table,
-            footerStats(spark, partDataDir(newSnap, i.table, i.part)),
-            newSnap)
+        if (i.packed < i.before.files) (i.table,
+          footerStats(spark, partDataDir(newSnap, i.table, i.part)), newSnap)
         else (i.table, i.before, i.src)
       }
-      val stats = footers.map { case (t, tf, _) => t -> tf }.toMap
-      val dataSnap =
-        footers.collect { case (t, _, s) if s != newSnap => t -> s }.toMap
-      // compaction never changes the logical schema: carry the
-      // source record's per-table schema ledger forward verbatim
-      writeLineage(newSnap, part, (doc \ "rows").extract[Long], stats,
-        dataSnap, "compact", None, schemasOf(doc))
+      writeRewriteLineage(newSnap, part, (doc \ "rows").extract[Long],
+        footers, "compact", doc)
     }
     // the marker stays until the lineage dir is expired: once the
     // snapshot commits nothing consults it (deleting it before the
@@ -1349,6 +1334,16 @@ class IceLite(val root: String) extends TableIO {
     commitSnapshot(newSnap, parts)
     newSnap
   }
+
+  /** A copy-on-write rewrite's record: `footers` gives each table's facts
+    * and the snapshot its bytes live under; a rewrite never changes the
+    * logical schema, so source record `doc`'s ledger carries verbatim. */
+  private def writeRewriteLineage(newSnap: Long, part: String, rows: Long,
+      footers: Seq[(String, TableFooter, Long)], op: String,
+      doc: JValue): Unit =
+    writeLineage(newSnap, part, rows, footers.map(f => f._1 -> f._2).toMap,
+      footers.collect { case (t, _, s) if s != newSnap => t -> s }.toMap,
+      op, None, schemasOf(doc))
 
   /** Copy-on-write row-level DELETE (Iceberg's delete-by-rewrite):
     * rows of `table` matching `pred` are removed by REWRITING only the
@@ -1378,12 +1373,7 @@ class IceLite(val root: String) extends TableIO {
       pred: org.apache.spark.sql.Column,
       prunePreds: Seq[(String, Double, Double)] = Nil): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val snap = currentSnapshotId.getOrElse(
-      sys.error("deleteWhere needs a committed snapshot"))
-    val newSnap = nextSnapshotId
-    require(!Files.exists(lineageDir(newSnap)),
-      s"snapshot $newSnap is in progress (uncommitted lineage exists); " +
-        "resume or discard it before deleting")
+    val (snap, newSnap) = rewriteIds("deleteWhere")
     atomicWrite(lineageDir(newSnap).resolve(IceLite.OpMarker), "delete")
     val parts = snapshotParts(snap)
     // every task settles before the first failure surfaces — no
@@ -1415,11 +1405,8 @@ class IceLite(val root: String) extends TableIO {
             (t, footerStats(spark, partDataDir(s0, t, part)), s0)
           }
         }
-        val stats = footers.map { case (t, tf, _) => t -> tf }.toMap
-        val dataSnap = footers
-          .collect { case (t, _, s0) if s0 != newSnap => t -> s0 }.toMap
-        writeLineage(newSnap, part, stats.valuesIterator.map(_.rows).sum,
-          stats, dataSnap, "delete", None, schemasOf(doc))
+        writeRewriteLineage(newSnap, part, footers.map(_._2.rows).sum,
+          footers, "delete", doc)
       }
     }
     commitSnapshot(newSnap, parts)
@@ -1436,15 +1423,16 @@ class IceLite(val root: String) extends TableIO {
 
   /** Ids of snapshots with lineage records but no manifest — the
     * in-progress resume state (normally at most one). */
-  private def inProgressIds: Set[Long] = {
-    val ld = p("lineage")
-    val committed = committedSnapshotIds.toSet
-    if (!Files.exists(ld)) Set.empty
-    else withList(ld)(_.map(_.getFileName.toString)
+  private def inProgressIds: Set[Long] =
+    snapDirIds(p("lineage")).toSet -- committedSnapshotIds
+
+  /** Ids of the `snap=N` dirs under `d` (none when `d` is absent). */
+  private def snapDirIds(d: Path): Seq[Long] =
+    if (!Files.exists(d)) Seq.empty
+    else withList(d)(_.map(_.getFileName.toString)
       .collect { case n if n.startsWith("snap=") =>
         n.stripPrefix("snap=").toLong
-      }.toSet) -- committed
-  }
+      }.toSeq)
 
   /** Lineage across all snapshots as a DataFrame (metrics/audit table):
     * one row per (snapshot, partition). Committed snapshots are served
@@ -1519,20 +1507,14 @@ class IceLite(val root: String) extends TableIO {
     // crashed compaction's records point at committed bytes, and an
     // expiry run before the resume/discard decision must not free them
     // out from under the checkpoint.
-    val referenced: Set[(Long, String, String)] = keep.flatMap { id =>
-      scala.util.Try(snapshotParts(id)).toOption.toSeq.flatten.flatMap {
-        part =>
-          lineageDoc(id, part).toSeq.flatMap(doc =>
-            (doc \ "tables").extract[Seq[String]].map(t =>
-              (dataSnapOf(id, part, t), t, part)))
-      }
-    } ++ inProgress.flatMap { id =>
-      completedParts(id).flatMap { part =>
-        lineageDoc(id, part).toSeq.flatMap(doc =>
-          (doc \ "tables").extract[Seq[String]].map(t =>
-            (dataSnapOf(id, part, t), t, part)))
-      }
+    def refs(id: Long, parts: Iterable[String]) = parts.flatMap { part =>
+      lineageDoc(id, part).toSeq.flatMap(doc =>
+        (doc \ "tables").extract[Seq[String]].map(t =>
+          (dataSnapOf(id, part, t), t, part)))
     }
+    val referenced: Set[(Long, String, String)] =
+      keep.flatMap(id => refs(id, scala.util.Try(snapshotParts(id)).getOrElse(Nil))) ++
+        inProgress.flatMap(id => refs(id, completedParts(id)))
     // Sweep EVERY non-retained data root, not just this call's expired
     // ids: a dir kept alive by a compaction reference outlives its own
     // snapshot's manifest, so once the REFERENCING snapshot is later
@@ -1540,15 +1522,7 @@ class IceLite(val root: String) extends TableIO {
     // id is no longer in committedSnapshotIds) and would leak forever.
     // The uncommitted in-progress id (lineage, no manifest) is left
     // alone as ever — it is the resume checkpoint, not history.
-    val dataRoots = {
-      val d = p("data")
-      if (!Files.exists(d)) Seq.empty
-      else withList(d)(_.map(_.getFileName.toString)
-        .collect { case n if n.startsWith("snap=") =>
-          n.stripPrefix("snap=").toLong
-        }.toSeq)
-    }
-    dataRoots.filterNot(keep).filterNot(inProgress).foreach { id =>
+    snapDirIds(p("data")).filterNot(keep).filterNot(inProgress).foreach { id =>
       val dataRoot = p("data", s"snap=$id")
       withList(dataRoot)(_.toSeq).foreach { tdir =>
         val table = dec(tdir.getFileName.toString)
@@ -1593,6 +1567,9 @@ object IceLite {
   /** Guards the session-conf toggle in readDirs (see there). */
   private[io] val readLock = new Object
 
+  /** Orders creating a staging dir before removing an empty `tmp/`. */
+  private[io] val stagingLock = new Object
+
   /** Max lineage docs per manifest shard file: bounds every single
     * driver JSON parse regardless of table size (10^6 partitions = 100
     * shards of 10^4, never one multi-GB document). */
@@ -1620,6 +1597,10 @@ object IceLite {
   /** Staging partition column name used by [[IceLite.ingestBucketed]];
     * dropped from file contents by `partitionBy`. */
   private[io] val BucketCol = "_gbucket"
+
+  /** Staging partition column of the one-part commits (the part name);
+    * dropped from file contents by `partitionBy`. */
+  private[io] val PartCol = "_gpart"
 
   /** Deterministic bucket of a value: CRC32 over UTF-8 bytes, mod n.
     * CRC32 because `java.util.zip.CRC32` (driver side — routing a point

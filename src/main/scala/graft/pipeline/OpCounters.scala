@@ -14,7 +14,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
   * and no driver-side counting, unlike the reference's per-row mutable
   * counters (which a distributed engine cannot have). Values are read
   * back after the run and can be committed as an IceLite metrics
-  * table ([[toDF]] → `commitPartition(..., Map("op_metrics" -> df))`).
+  * table ([[toDF]] → `commitPartition(..., Map("op_metrics" -> df))`, a
+  * one-part staged landing).
   */
 final class OpCounters {
   private val obs =

@@ -46,7 +46,7 @@ class DriverFanOutSpec extends AnyFunSuite {
     intercept[Exception] {
       ice.commitPartition(1L, "p", 1L, Map("bad" -> bad, "slow" -> slowDf))
     }
-    assert(Files.exists(Paths.get(ice.partDataDir(1L, "slow", "p"), "_SUCCESS")),
+    assert(successMarkers(root, "slow").nonEmpty,
       "the call returned while the slow table was still writing")
     assert(!ice.isPartCompleted(1L, "p"))
   }
@@ -62,6 +62,55 @@ class DriverFanOutSpec extends AnyFunSuite {
     assert(successMarkers(root, "slow").nonEmpty,
       "the call returned while the slow table was still writing")
     assert(ice.completedParts(1L).isEmpty)
+  }
+
+  private def stagingDirs(root: String, snap: Long): Seq[String] = {
+    val tmp = Paths.get(root, "tmp")
+    if (!Files.exists(tmp)) Seq.empty
+    else {
+      val s = Files.list(tmp)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(s"stage-$snap-")).toSeq
+      finally s.close()
+    }
+  }
+
+  test("a failed landing's staging is swept by discardInProgress and " +
+    "commitSnapshot") {
+    import spark.implicits._
+    val root = freshRoot()
+    val ice = new IceLite(root)
+    def failedLanding(): Unit = {
+      val (bad, slowDf) = badAndSlow
+      intercept[Exception] {
+        ice.ingestPartitionedTables(spark, 1L, "g", Map("bad" -> bad, "slow" -> slowDf))
+      }
+      assert(stagingDirs(root, 1L).nonEmpty, "the failed write left no staging")
+    }
+    failedLanding()
+    ice.discardInProgress(1L)
+    assert(stagingDirs(root, 1L).isEmpty)
+    failedLanding()
+    ice.commitPartition(1L, "q", 1L, Map("t" -> Seq((1L, "q")).toDF("x", "g")))
+    ice.commitSnapshot(1L, Seq("q"))
+    assert(stagingDirs(root, 1L).isEmpty)
+    assert(!Files.exists(Paths.get(root, "tmp")))
+    assert(ice.readTable(spark, 1L, "t").count() === 1)
+  }
+
+  test("concurrent one-part commits under one snapshot land their own rows") {
+    val root = freshRoot()
+    val ice = new IceLite(root)
+    // both writes take ~2 s, so they overlap: a staging dir shared by
+    // the two commits would lose one commit's rows to the other's
+    graft.io.DriverFanOut(spark, 2, Seq("p", "q")) { part =>
+      val df = spark.range(3).select(slow(col("id")).as("x"), lit(part).as("g"))
+      ice.commitPartition(1L, part, 3L, Map("t" -> df))
+    }
+    ice.commitSnapshot(1L, Seq("p", "q"))
+    val back = ice.readTable(spark, 1L, "t").select("part", "g", "x").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted.toSeq
+    assert(back === Seq("p", "q").flatMap(part => (0L until 3L).map((part, part, _))))
   }
 
   /** Job group of every job started, in submission order (listener

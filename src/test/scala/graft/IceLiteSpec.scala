@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.io.IceLite
 import graft.rules.FileRules
 import graft.synth.FilesTable
@@ -53,6 +54,93 @@ class IceLiteSpec extends AnyFunSuite {
     assert(ice.completedParts(snap) === nasty.toSet)
     val back = ice.readTable(spark, snap, "t")
     assert(back.select("part").collect().map(_.getString(0)).sorted === nasty.sorted.toArray)
+  }
+
+  /** Every lineage record and interned schema under `root`, by relative
+    * path, byte for byte. */
+  private def ledger(root: String): Map[String, String] = {
+    val base = java.nio.file.Paths.get(root)
+    val s = Files.walk(base)
+    try s.iterator().asScala
+      .filter(f => Files.isRegularFile(f) && {
+        val rel = base.relativize(f).toString
+        rel.startsWith("lineage") || rel.startsWith("schemas")
+      })
+      .map(f => base.relativize(f).toString -> Files.readString(f)).toMap
+    finally s.close()
+  }
+
+  test("a one-part commit writes the same lineage as commitParts; the " +
+    "reserved part column never reaches the ledger") {
+    import spark.implicits._
+    val parts = Seq("a+b", "orgé", "sp ace")
+    // `t` has its own `part` data column; `z` has no rows anywhere
+    def t(part: String) = Seq((part, 1L), (part, 7L)).toDF("part", "n")
+    val z = Seq.empty[(String, Double)].toDF("k", "v")
+    val one = freshRoot()
+    val ice = new IceLite(one)
+    parts.foreach(part => ice.commitPartition(1L, part, 5L, Map("t" -> t(part), "z" -> z)))
+    val wave = freshRoot()
+    new IceLite(wave).commitParts(1L, "pc",
+      Map("t" -> parts.map(part => t(part).withColumn("pc", lit(part))).reduce(_ union _),
+        "z" -> z.withColumn("pc", lit("a+b"))),
+      parts.map(_ -> 5L).toMap)
+    val got = ledger(one)
+    assert(got.keys.count(_.startsWith("lineage")) === parts.size)
+    assert(got === ledger(wave))
+    assert(!got.values.exists(_.contains("_gpart")))
+    ice.commitSnapshot(1L, parts)
+    assert(ice.readTable(spark, 1L, "t").columns.count(_ == "part") === 1)
+    assert(ice.readTable(spark, 1L, "z").count() === 0)
+    assert(ice.tableRowCount(1L, "t") === Some(6L))
+  }
+
+  test("commitPartitionFromFooters records its source files and the footer " +
+    "row sum") {
+    import spark.implicits._
+    val ice = new IceLite(freshRoot())
+    val fs = Seq("file:/in/a.parquet", "file:/in/b.parquet")
+    ice.commitPartitionFromFooters(1L, "b00000",
+      Map("t" -> (0 until 5).toDF("v"), "u" -> (0 until 2).toDF("w")),
+      srcFiles = Some(fs))
+    ice.commitPartitionFromFooters(1L, "b00001",
+      Map("t" -> Seq.empty[Int].toDF("v"), "u" -> Seq.empty[Int].toDF("w")))
+    assert(ice.partSourceFiles(1L, "b00000") === Some(fs))
+    assert(ice.partSourceFiles(1L, "b00001") === None)
+    val rows = ice.lineage(spark).select("part", "rows").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(rows === Map("b00000" -> 7L, "b00001" -> 0L))
+  }
+
+  test("an empty or NULL part name is refused before any Spark job") {
+    import spark.implicits._
+    val root = freshRoot()
+    val ice = new IceLite(root)
+    val df = Seq((1L, "x")).toDF("n", "s")
+    val e = intercept[IllegalArgumentException] {
+      ice.commitPartition(1L, "", 1L, Map("t" -> df))
+    }
+    assert(e.getMessage.contains("\"\""), e.getMessage)
+    intercept[IllegalArgumentException] {
+      ice.commitPartitionFromFooters(1L, null, Map("t" -> df))
+    }
+    val e2 = intercept[IllegalArgumentException] {
+      ice.commitParts(1L, "s", Map("t" -> df), Map("" -> 1L))
+    }
+    assert(e2.getMessage.contains("\"\""), e2.getMessage)
+    assert(ice.completedParts(1L).isEmpty)
+    assert(!Files.exists(ice.lineageDir(1L)))
+    Seq("data/snap=1", "tmp").foreach(d =>
+      assert(!Files.exists(java.nio.file.Paths.get(root, d)), d))
+  }
+
+  test("a table carrying the reserved part column is refused") {
+    import spark.implicits._
+    val ice = new IceLite(freshRoot())
+    intercept[IllegalArgumentException] {
+      ice.commitPartition(1L, "p", 1L, Map("t" -> Seq(1L).toDF("_gpart")))
+    }
+    assert(ice.completedParts(1L).isEmpty)
   }
 
   test("footer stats prune whole partitions from the scan (inputFiles shrink)") {
