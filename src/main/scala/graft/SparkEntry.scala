@@ -152,6 +152,47 @@ object SparkEntry {
     dir.toString
   }
 
+  /** The two-snapshot fixture of `v_profile_incr` and `v_drift_incr`:
+    * snapshot 1 holds the first half of the orgs, snapshot 2 appends
+    * the rest and carries the first half forward. Each org's partition
+    * lands its `files` rows and the stats table `table`, built by
+    * `stats` from rows carrying their org in `__org`, through the
+    * one-job bulk ingest (a per-partition agg loop is O(partitions)
+    * driver-sequential Spark jobs). Read-only once committed, so it is
+    * built once per JVM (the marker) and every pass re-runs its reads,
+    * merges and certifying requires against it. */
+  private def incrStatsFixture(s: SparkSession, d: String, prefix: String,
+      table: String)(stats: DataFrame => DataFrame): graft.io.IceLite = {
+    val root = tmpWorkDir(prefix, d)
+    val marker = java.nio.file.Paths.get(root, "_FIXTURE_READY")
+    val ice = new graft.io.IceLite(root)
+    if (!java.nio.file.Files.exists(marker)) {
+      rmTree(java.nio.file.Paths.get(root))
+      val files = FilesTable.files(s, d).cache()
+      try {
+        val orgCol = Verdicts.org(col("repo"))
+        val orgs = files.select(orgCol.as("o")).distinct()
+          .collect().map(_.getString(0)).sorted.toSeq
+        val (histOrgs, newOrgs) = orgs.splitAt(math.max(1, orgs.length / 2))
+        require(newOrgs.nonEmpty, "corpus too small to split into an append")
+        val fo = files.withColumn("__org", orgCol)
+        def ingest(snap: Long, sel: Seq[String]): Unit = {
+          val sub = fo.filter(col("__org").isin(sel: _*))
+          ice.ingestPartitionedTables(s, snap, "__org",
+            Map("files" -> sub, table -> stats(sub)))
+          ()
+        }
+        ingest(1L, histOrgs)
+        ice.commitSnapshot(1L, histOrgs)
+        ingest(2L, newOrgs)
+        histOrgs.foreach(o => ice.carryForwardPartition(2L, o, 1L))
+        ice.commitSnapshot(2L, orgs)
+        java.nio.file.Files.writeString(marker, "")
+      } finally { files.unpersist(); () }
+    }
+    ice
+  }
+
   private def listParquet(dir: java.nio.file.Path): Set[java.nio.file.Path] = {
     val ls = java.nio.file.Files.list(dir)
     try ls.iterator().asScala
@@ -974,38 +1015,9 @@ object SparkEntry {
       // "distribution-drift in a single aggregation pass per
       // partition", made incremental). Hash-matches the full-corpus
       // oracle computing the same cohorts in SQL.
-      // r8: one-job bulk stats ingest + per-JVM read-only fixture —
-      // same rationale as v_profile_incr (VERDICT r7 #1 and #8)
-      val width = FileRules.drift.bucketWidth
-      val root = tmpWorkDir("graft_drift_incr", d)
-      val marker = java.nio.file.Paths.get(root, "_FIXTURE_READY")
-      val ice = new graft.io.IceLite(root)
-      if (!java.nio.file.Files.exists(marker)) {
-        rmTree(java.nio.file.Paths.get(root))
-        val files = FilesTable.files(s, d).cache()
-        try {
-          val orgCol = Verdicts.org(col("repo"))
-          val orgs = files.select(orgCol.as("o")).distinct()
-            .collect().map(_.getString(0)).sorted.toSeq
-          val (histOrgs, newOrgs) = orgs.splitAt(math.max(1, orgs.length / 2))
-          require(newOrgs.nonEmpty, "corpus too small to split into an append")
-          val fo = files.withColumn("__org", orgCol)
-          def ingest(snap: Long, sel: Seq[String]): Unit = {
-            val sub = fo.filter(col("__org").isin(sel: _*))
-            val hist = graft.validate.IncrementalProfile.histogramsByPartition(
-              sub, "__org", length(col("content")), width)
-            ice.ingestPartitionedTables(s, snap, "__org",
-              Map("files" -> sub, "__hist" -> hist))
-            ()
-          }
-          ingest(1L, histOrgs)
-          ice.commitSnapshot(1L, histOrgs)
-          ingest(2L, newOrgs)
-          histOrgs.foreach(o => ice.carryForwardPartition(2L, o, 1L))
-          ice.commitSnapshot(2L, orgs)
-          java.nio.file.Files.writeString(marker, "")
-        } finally { files.unpersist(); () }
-      }
+      val ice = incrStatsFixture(s, d, "graft_drift_incr", "__hist")(rows =>
+        graft.validate.IncrementalProfile.lengthHistogram(rows,
+          length(col("content")), FileRules.drift.bucketWidth, groupBy = Some("__org")))
       // history distribution: snapshot 1's histogram rows; appended
       // distribution: only the partitions NEW in snapshot 2
       val h0 = ice.readTable(s, 1L, "__hist")
@@ -1109,46 +1121,12 @@ object SparkEntry {
       // are rescanned, the aggregation is metadata-sized at any table
       // size. Exact-mergeable fields (counts, min/max) hash-match the
       // full-corpus oracle; the distinct-commit estimate merges via
-      // hll_union_agg and is certified within 2% of the exact count
+      // hll_union_agg and is certified within 5% of the exact count
       // (approximate by design — DataSketches HLL, lgK 12).
-      // r8: the fixture lands through the ONE-JOB bulk stats path
-      // (IncrementalProfile.profilesByPartition + IceLite
-      // .ingestPartitionedTables — VERDICT r7 #1: the per-partition agg
-      // loop was O(partitions) driver-sequential Spark jobs), and the
-      // two-snapshot table is READ-ONLY once committed, so it builds
-      // once per JVM (the streaming-fixture marker pattern, VERDICT r7
-      // #8); every pass re-runs the reads, merges and certifying
-      // requires against it.
-      val root = tmpWorkDir("graft_profile_incr", d)
-      val marker = java.nio.file.Paths.get(root, "_FIXTURE_READY")
-      val ice = new graft.io.IceLite(root)
-      if (!java.nio.file.Files.exists(marker)) {
-        rmTree(java.nio.file.Paths.get(root))
-        val files = FilesTable.files(s, d).cache()
-        try {
-          val orgCol = Verdicts.org(col("repo"))
-          val orgs = files.select(orgCol.as("o")).distinct()
-            .collect().map(_.getString(0)).sorted.toSeq
-          val (histOrgs, newOrgs) = orgs.splitAt(math.max(1, orgs.length / 2))
-          require(newOrgs.nonEmpty, "corpus too small to split into an append")
-          val fo = files.withColumn("__org", orgCol)
-          def ingest(snap: Long, sel: Seq[String]): Unit = {
-            val sub = fo.filter(col("__org").isin(sel: _*))
-            val prof = graft.validate.IncrementalProfile.profilesByPartition(
-              sub, "__org", nullCols = Seq("lang"), rangeCols = Seq("doc_id"),
-              distinctCols = Seq("commit"))
-            ice.ingestPartitionedTables(s, snap, "__org",
-              Map("files" -> sub, "__profile" -> prof))
-            ()
-          }
-          ingest(1L, histOrgs)
-          ice.commitSnapshot(1L, histOrgs)
-          ingest(2L, newOrgs)
-          histOrgs.foreach(o => ice.carryForwardPartition(2L, o, 1L))
-          ice.commitSnapshot(2L, orgs)
-          java.nio.file.Files.writeString(marker, "")
-        } finally { files.unpersist(); () }
-      }
+      val ice = incrStatsFixture(s, d, "graft_profile_incr", "__profile")(rows =>
+        graft.validate.IncrementalProfile.partitionProfile(rows,
+          nullCols = Seq("lang"), rangeCols = Seq("doc_id"),
+          distinctCols = Seq("commit"), groupBy = Some("__org")))
       val prof = ice.readTable(s, 2L, "__profile")
       require(prof.inputFiles.nonEmpty &&
         prof.inputFiles.forall(_.contains("/__profile/")),

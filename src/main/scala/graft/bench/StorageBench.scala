@@ -495,7 +495,8 @@ object StorageBench {
     * `__hist`) for 10^3 partitions land through a CONSTANT number of
     * Spark jobs (one groupBy pass per stats table + one clustered
     * partitionBy write per table), not one driver-sequential job per
-    * partition — the shape `IncrementalProfile.profilesByPartition` +
+    * partition — the shape the grouped `IncrementalProfile`
+    * `partitionProfile` / `lengthHistogram` and
     * `IceLite.ingestPartitionedTables` replace the r7 per-partition
     * `partitionProfile` loop with. Prints the measured JOB COUNT
     * alongside the wall time; the r7 loop shape costs ≥2 jobs per
@@ -520,11 +521,12 @@ object StorageBench {
     val ice = new IceLite(root)
     spark.sparkContext.addSparkListener(listener)
     val (landed, dt) = try time {
-      val prof = graft.validate.IncrementalProfile.profilesByPartition(
-        df, "part", nullCols = Seq("lang"), rangeCols = Seq("doc_id"),
-        distinctCols = Seq("commitsha"))
-      val hist = graft.validate.IncrementalProfile.histogramsByPartition(
-        df, "part", length(col("commitsha")) * (col("doc_id") % 7 + 1), 4)
+      val prof = graft.validate.IncrementalProfile.partitionProfile(
+        df, nullCols = Seq("lang"), rangeCols = Seq("doc_id"),
+        distinctCols = Seq("commitsha"), groupBy = Some("part"))
+      val hist = graft.validate.IncrementalProfile.lengthHistogram(
+        df, length(col("commitsha")) * (col("doc_id") % 7 + 1), 4,
+        groupBy = Some("part"))
       val p = ice.ingestPartitionedTables(spark, 1L, "part",
         Map("files" -> df, "__profile" -> prof, "__hist" -> hist))
       ice.commitSnapshot(1L, p)

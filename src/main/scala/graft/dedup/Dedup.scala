@@ -166,7 +166,10 @@ object Dedup {
     // constraint to one side de-duplicates the sides and silently
     // re-evaluates the signature pass per side (measured at 525k docs:
     // +1.5s for a trivial extra filter). Pinning the tiny (id, sig)
-    // table makes single evaluation unconditional.
+    // table makes single evaluation unconditional. A local checkpoint
+    // lives in executor storage with its lineage cut, so a lost
+    // executor fails the query instead of recomputing the signatures
+    // (every localCheckpoint in this object shares that trade-off).
     val sigs = simhashDf(df, textCol, "sig").select(col(idCol).as("id"), col("sig"))
       .localCheckpoint()
     // explicit co-partitioning on the join key, sized by the session's
@@ -427,7 +430,8 @@ object Dedup {
     * is deterministic and works for ANY ordered id type (string UUIDs,
     * u64 hashes); the tempting sum(label) shortcut breaks on string
     * ids and overflows Long under ANSI for large numeric ids.
-    * localCheckpoint per iteration keeps plans from growing. */
+    * localCheckpoint per iteration keeps plans from growing; it cannot
+    * recover a lost executor (see simhashPairs). */
   /** Ordering identical to Spark's for the fast-path id types:
     * UTF8String binary order (unsigned UTF-8 bytes — String.compareTo
     * diverges on supplementary characters) for strings, Comparable for

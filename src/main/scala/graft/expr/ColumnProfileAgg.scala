@@ -2,6 +2,7 @@ package graft.expr
 
 import java.nio.ByteBuffer
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
@@ -38,6 +39,19 @@ case class ColumnProfileAgg(
     StructField("min_len", LongType),
     StructField("max_len", LongType)))
 
+  /** Strings and binary only: other values' lengths depend on how they
+    * are formatted, so callers cast them to string first
+    * ([[graft.validate.ProfileSinglePass]] does), and arrays, maps and
+    * structs are profiled as `to_json(col)`. */
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"col_profile takes string or binary, not ${t.simpleString}: " +
+        "cast atomic values to string, profile to_json(col) for arrays, maps and structs")
+  }
+
+  @transient private lazy val binary = child.dataType == BinaryType
+
   override def createAggregationBuffer(): Buf = new Buf(1 << p)
 
   override def update(b: Buf, input: InternalRow): Buf = {
@@ -47,21 +61,10 @@ case class ColumnProfileAgg(
     else {
       val u = v match {
         case s: UTF8String => s
-        // binary needs its BYTES: Array[Byte].toString is the JVM
-        // identity rep ("[B@1a2b3c"), which would make every row look
-        // distinct and nondeterministic across runs. Other complex
-        // types (arrays/structs) should be profiled via to_json
-        // upstream; their InternalRow toString would have the same
-        // identity hazard, so they fail loudly instead.
         case b: Array[Byte] => UTF8String.fromBytes(b)
-        case _: org.apache.spark.sql.catalyst.util.ArrayData |
-             _: org.apache.spark.sql.catalyst.util.MapData |
-             _: InternalRow =>
-          throw new UnsupportedOperationException(
-            "col_profile on array/map/struct columns: profile to_json(col) instead")
-        case other => UTF8String.fromString(other.toString)
       }
-      val len = u.numChars().toLong
+      // length(binary) counts bytes, length(string) characters
+      val len = (if (binary) u.numBytes else u.numChars).toLong
       if (len < b.minLen) b.minLen = len
       if (len > b.maxLen) b.maxLen = len
       val h = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)

@@ -240,8 +240,12 @@ class IceLite(val root: String) extends TableIO {
   /** The source files a partition's commit recorded (streaming
     * committer replay witness); None when the record carries none. */
   def partSourceFiles(snap: Long, part: String): Option[Seq[String]] =
-    lineageDoc(snap, part).map(_ \ "srcFiles").collect {
-      case fs: JArray => fs.extract[Seq[String]]
+    lineageDoc(snap, part).flatMap(srcFilesOf)
+
+  private def srcFilesOf(doc: JValue): Option[Seq[String]] =
+    (doc \ "srcFiles") match {
+      case fs: JArray => Some(fs.extract[Seq[String]])
+      case _ => None
     }
 
   /** Integral footer bounds above 2^53 can round toward the INTERIOR
@@ -823,8 +827,8 @@ class IceLite(val root: String) extends TableIO {
   }
 
   /** Ingest data and its per-partition stats tables (e.g. `__profile` /
-    * `__hist` rows from
-    * [[graft.validate.IncrementalProfile.profilesByPartition]]) under
+    * `__hist` rows from the grouped
+    * [[graft.validate.IncrementalProfile.partitionProfile]]) under
     * in-progress snapshot `snap`, partitioned by the VALUES of `partCol`,
     * with a CONSTANT number of Spark jobs (one clustered [[landStaged]]
     * write per table, never one job per partition) and ONE lineage
@@ -1337,13 +1341,14 @@ class IceLite(val root: String) extends TableIO {
 
   /** A copy-on-write rewrite's record: `footers` gives each table's facts
     * and the snapshot its bytes live under; a rewrite never changes the
-    * logical schema, so source record `doc`'s ledger carries verbatim. */
+    * logical schema or the input the partition was derived from, so
+    * source record `doc`'s ledger and `srcFiles` carry verbatim. */
   private def writeRewriteLineage(newSnap: Long, part: String, rows: Long,
       footers: Seq[(String, TableFooter, Long)], op: String,
       doc: JValue): Unit =
     writeLineage(newSnap, part, rows, footers.map(f => f._1 -> f._2).toMap,
       footers.collect { case (t, _, s) if s != newSnap => t -> s }.toMap,
-      op, None, schemasOf(doc))
+      op, srcFilesOf(doc), schemasOf(doc))
 
   /** Copy-on-write row-level DELETE (Iceberg's delete-by-rewrite):
     * rows of `table` matching `pred` are removed by REWRITING only the

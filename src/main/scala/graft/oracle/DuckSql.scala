@@ -12,6 +12,14 @@ object DuckSql {
 
   private def q(c: String): String = if (c == "commit") "\"commit\"" else c
 
+  /** [[graft.validate.Verdicts.org]] in DuckDB SQL: the org of `repo`,
+    * with the same `__null__` / `__empty__` sentinels for a NULL repo
+    * and an empty org. */
+  private def org(repo: String): String =
+    s"CASE WHEN $repo IS NULL THEN '__null__' " +
+      s"WHEN split_part($repo, '/', 1) = '' THEN '__empty__' " +
+      s"ELSE split_part($repo, '/', 1) END"
+
   /** DuckDB boolean expression that is TRUE when the row VIOLATES r. */
   def violationCond(r: RowRule): String = {
     val c = q(r.column)
@@ -57,9 +65,9 @@ object DuckSql {
     val ruleValues = FileRules.rowRules.map(r => s"('${r.id}')").mkString(", ")
     cte +
       s""", viol AS (
-         |  SELECT split_part(repo, '/', 1) AS part, rule_id, COUNT(*) AS n
+         |  SELECT ${org("repo")} AS part, rule_id, COUNT(*) AS n
          |  FROM (${violationsUnion(FileRules.rowRules)}) GROUP BY 1, 2
-         |), orgs AS (SELECT DISTINCT split_part(repo, '/', 1) AS part FROM files_all),
+         |), orgs AS (SELECT DISTINCT ${org("repo")} AS part FROM files_all),
          |rules(rule_id) AS (VALUES $ruleValues)
          |SELECT o.part, r.rule_id,
          |  CAST(COALESCE(v.n, 0) AS BIGINT) AS violation_count,
@@ -104,16 +112,16 @@ object DuckSql {
     * the `license` column existed read back as typed NULLs; appended
     * orgs carry the doc_id-derived license. */
   def vSchemaEvolve: String = cte +
-    """, orgs_ranked AS (
+    s""", orgs_ranked AS (
       |  SELECT o, row_number() OVER (ORDER BY o) AS rn, COUNT(*) OVER () AS n
-      |  FROM (SELECT DISTINCT split_part(repo, '/', 1) AS o FROM files_all)
+      |  FROM (SELECT DISTINCT ${org("repo")} AS o FROM files_all)
       |)
       |SELECT f.repo, f.path, f."commit", f.lang, f.content_sha256, f.doc_id,
       |  CASE WHEN r.rn <= greatest(1, r.n // 2) THEN NULL
       |       ELSE CASE f.doc_id % 4 WHEN 0 THEN 'mit' WHEN 1 THEN 'apache2'
       |                 WHEN 2 THEN 'gpl3' ELSE 'bsd' END END AS license
       |FROM files_all f
-      |JOIN orgs_ranked r ON split_part(f.repo, '/', 1) = r.o""".stripMargin
+      |JOIN orgs_ranked r ON ${org("f.repo")} = r.o""".stripMargin
 
   /** Incremental drift: PSI between the history cohort (first half of
     * the sorted distinct org list — the same splitAt as the Spark side)
@@ -122,12 +130,12 @@ object DuckSql {
   def vDriftIncr(bucketWidth: Int): String = cte +
     s""", orgs_ranked AS (
        |  SELECT o, row_number() OVER (ORDER BY o) AS rn, COUNT(*) OVER () AS n
-       |  FROM (SELECT DISTINCT split_part(repo, '/', 1) AS o FROM files_all)
+       |  FROM (SELECT DISTINCT ${org("repo")} AS o FROM files_all)
        |), hist AS (
        |  SELECT CAST(FLOOR(LENGTH(f.content) / $bucketWidth) AS BIGINT) AS bucket,
        |    SUM(CASE WHEN r.rn <= greatest(1, r.n // 2) THEN 1 ELSE 0 END) AS c0,
        |    SUM(CASE WHEN r.rn <= greatest(1, r.n // 2) THEN 0 ELSE 1 END) AS c1
-       |  FROM files_all f JOIN orgs_ranked r ON split_part(f.repo, '/', 1) = r.o
+       |  FROM files_all f JOIN orgs_ranked r ON ${org("f.repo")} = r.o
        |  WHERE f.content IS NOT NULL GROUP BY 1
        |), p AS (
        |  SELECT GREATEST(CAST(c0 AS DOUBLE) / SUM(c0) OVER (), CAST(0.000001 AS DOUBLE)) AS p0,

@@ -16,8 +16,10 @@ import org.apache.spark.sql.types.NumericType
   * Mergeability per field: row/null counts merge by SUM, min/max by
   * MIN/MAX (all exact); distinct counts are NOT decomposable exactly,
   * so they merge as DataSketches HLL unions (`hll_sketch_agg` /
-  * `hll_union_agg`, approximate — lgK 12 ≈ ±1.6% RSE; the oracle-gated
-  * `v_profile_incr` certifies ≤2% drift vs exact at bench scale).
+  * `hll_union_agg`: HLL_8 with the default 2^12 registers, ≈ 1.6% RSE;
+  * the oracle-gated `v_profile_incr` certifies ≤ 5% vs exact). The
+  * whole-table [[Profile]] uses exact COUNT(DISTINCT) or HLL++, and
+  * [[ProfileSinglePass]] its own 2^11-register HLL; neither merges.
   *
   * The reference computes its schema checks per playbook run over the
   * full input (sifter's transform pipeline has no incremental stats
@@ -30,51 +32,26 @@ object IncrementalProfile {
     * `null_<c>` counts, `min_<c>`/`max_<c>` for numeric columns, and
     * an HLL sketch `hll_<c>` for each of `distinctCols`. Column set
     * and order are deterministic (input order, nulls before ranges
-    * before sketches). */
+    * before sketches). `groupBy` names a partition column: every
+    * partition's row in ONE Spark job (one `groupBy` pass, where a
+    * per-partition loop costs O(partitions) driver-sequential jobs),
+    * the partition column first, so a `partitionBy` write drops it and
+    * each partition's file carries exactly the ungrouped schema. */
   def partitionProfile(part: DataFrame, nullCols: Seq[String],
-      rangeCols: Seq[String], distinctCols: Seq[String]): DataFrame = {
-    val aggs = profileAggs(part, nullCols, rangeCols, distinctCols)
-    part.agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Every partition's [[partitionProfile]] row in ONE Spark job — the
-    * bulk-ingest face (VERDICT r7 #1: the per-partition agg loop is
-    * O(partitions) driver-sequential jobs; every aggregate here is
-    * mergeable SQL, so a single `groupBy(partCol)` pass lands all of
-    * them). Output: one row per `partCol` value, `partCol` first (so
-    * a `partitionBy(partCol)` write drops it and each partition's file
-    * carries exactly the [[partitionProfile]] schema). */
-  def profilesByPartition(df: DataFrame, partCol: String,
-      nullCols: Seq[String], rangeCols: Seq[String],
-      distinctCols: Seq[String]): DataFrame = {
-    val aggs = profileAggs(df, nullCols, rangeCols, distinctCols)
-    df.groupBy(col(partCol)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** The aggregates of one [[partitionProfile]] row, `n_rows` first. */
-  private def profileAggs(df: DataFrame, nullCols: Seq[String],
-      rangeCols: Seq[String], distinctCols: Seq[String]): Seq[Column] = {
+      rangeCols: Seq[String], distinctCols: Seq[String],
+      groupBy: Option[String] = None): DataFrame = {
     rangeCols.foreach { c =>
-      require(df.schema(c).dataType.isInstanceOf[NumericType],
+      require(part.schema(c).dataType.isInstanceOf[NumericType],
         s"range column '$c' is not numeric (min/max of strings does not " +
           "merge through parquet footers consistently)")
     }
-    count(lit(1)).as("n_rows") +:
-      (nullCols.map(c =>
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"null_$c")) ++
-        rangeCols.flatMap(c => Seq(
-          min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) ++
-        distinctCols.map(c => hll_sketch_agg(col(c)).as(s"hll_$c")))
+    val aggs = nullCols.map(c =>
+      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"null_$c")) ++
+      rangeCols.flatMap(c => Seq(
+        min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) ++
+      distinctCols.map(c => hll_sketch_agg(col(c)).as(s"hll_$c"))
+    part.groupBy(groupBy.toSeq.map(col): _*).agg(count(lit(1)).as("n_rows"), aggs: _*)
   }
-
-  /** Every partition's [[lengthHistogram]] in ONE Spark job: one
-    * `groupBy(partCol, bucket)` pass; `partCol` first for the same
-    * `partitionBy` reason as [[profilesByPartition]]. */
-  def histogramsByPartition(df: DataFrame, partCol: String, value: Column,
-      bucketWidth: Int): DataFrame =
-    df.select(col(partCol), floor(value / bucketWidth).cast("long").as("bucket"))
-      .filter(col("bucket").isNotNull)
-      .groupBy(col(partCol), col("bucket")).agg(count(lit(1)).as("n"))
 
   /** Merge per-partition profile rows back into one whole-table row:
     * counts SUM, ranges MIN/MAX, sketches `hll_union_agg` →
@@ -99,12 +76,12 @@ object IncrementalProfile {
     * ([[DriftCheck.psiFromHists]]): `(bucket, n)` rows for
     * `floor(value / bucketWidth)`, nulls excluded (the same null rule
     * as [[DriftCheck.ks]] — null-rate difference is [[partitionProfile]]'s
-    * job, not the distribution's). */
-  def lengthHistogram(part: DataFrame, value: Column,
-      bucketWidth: Int): DataFrame =
-    part.select(floor(value / bucketWidth).cast("long").as("bucket"))
-      .filter(col("bucket").isNotNull)
-      .groupBy("bucket").agg(count(lit(1)).as("n"))
+    * job, not the distribution's). `groupBy` names a partition column:
+    * every partition's histogram in one pass, `(part, bucket, n)`,
+    * for the same `partitionBy` reason as [[partitionProfile]]. */
+  def lengthHistogram(part: DataFrame, value: Column, bucketWidth: Int,
+      groupBy: Option[String] = None): DataFrame =
+    Histogram(part, groupBy.toSeq, value, bucketWidth, count(lit(1)).as("n"))
 
   /** Sum per-partition histogram rows into one distribution. */
   def mergeHistograms(hists: DataFrame): DataFrame =

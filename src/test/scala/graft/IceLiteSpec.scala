@@ -112,6 +112,23 @@ class IceLiteSpec extends AnyFunSuite {
     assert(rows === Map("b00000" -> 7L, "b00001" -> 0L))
   }
 
+  test("compactSnapshot and deleteWhere carry a partition's source files " +
+    "into their records") {
+    import spark.implicits._
+    val ice = new IceLite(freshRoot())
+    val fs = Seq("file:/in/a.parquet", "file:/in/b.parquet")
+    ice.commitPartitionFromFooters(1L, "b00000",
+      Map("t" -> (0 until 6).toDF("v").repartition(3)), srcFiles = Some(fs))
+    ice.commitSnapshot(1L, Seq("b00000"))
+    val c = ice.compactSnapshot(spark)
+    assert(ice.completedParts(c) === Set("b00000"))
+    assert(ice.partSourceFiles(c, "b00000") === Some(fs))
+    val d = ice.deleteWhere(spark, "t", col("v") === 3)
+    assert(ice.completedParts(d) === Set("b00000"))
+    assert(ice.readTable(spark, d, "t").count() === 5L)
+    assert(ice.partSourceFiles(d, "b00000") === Some(fs))
+  }
+
   test("an empty or NULL part name is refused before any Spark job") {
     import spark.implicits._
     val root = freshRoot()

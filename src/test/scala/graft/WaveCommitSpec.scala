@@ -149,19 +149,20 @@ class WaveCommitSpec extends AnyFunSuite {
   }
 
   test("escaped org names and the NULL-repo sentinel round-trip through a wave") {
+    // repo "/x" has an empty org: it lands under its own sentinel too
     val root = freshRoot()
     val files = rowsOf(Seq(("a+b/r", true), ("orgé/r", false), ("sp ace/r", true),
-      (null, false), ("plain/r", false)))
+      (null, false), ("plain/r", false), ("/x", false)))
     val snap = CheckpointedValidation.run(spark, files, FileRules.rowRules, root)
     val ice = new IceLite(root)
-    val parts = Set("a+b", "orgé", "sp ace", "__null__", "plain")
+    val parts = Set("a+b", "orgé", "sp ace", "__null__", "plain", "__empty__")
     assert(ice.snapshotParts(snap).toSet === parts)
     def partsOf(table: String): Set[String] = ice.readTable(spark, snap, table)
       .select("part").distinct().collect().map(_.getString(0)).toSet
     assert(partsOf("verdicts") === parts)
     assert(partsOf("metrics") === parts)
-    // pattern_repo on the escaped names, required_repo on the NULL repo;
-    // plain/r breaks nothing and reads back no rows
+    // pattern_repo on the escaped names and "/x", required_repo on the
+    // NULL repo; plain/r breaks nothing and reads back no rows
     assert(partsOf("violations") === parts - "plain")
     def canon(df: DataFrame): Seq[String] =
       df.select("rule_id", "col_name", "repo", "path", "commit", "observed")
@@ -173,6 +174,6 @@ class WaveCommitSpec extends AnyFunSuite {
     val direct = Verdicts.compute(spark, files, FileRules.rowRules)
     assert(committed.exceptAll(direct).count() === 0)
     assert(direct.exceptAll(committed).count() === 0)
-    assert(ice.lineage(spark).agg(sum("rows")).collect()(0).getLong(0) === 5L)
+    assert(ice.lineage(spark).agg(sum("rows")).collect()(0).getLong(0) === 6L)
   }
 }
