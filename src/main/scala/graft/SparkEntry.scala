@@ -152,17 +152,20 @@ object SparkEntry {
     dir.toString
   }
 
-  /** The two-snapshot fixture of `v_profile_incr` and `v_drift_incr`:
-    * snapshot 1 holds the first half of the orgs, snapshot 2 appends
-    * the rest and carries the first half forward. Each org's partition
-    * lands its `files` rows and the stats table `table`, built by
-    * `stats` from rows carrying their org in `__org`, through the
-    * one-job bulk ingest (a per-partition agg loop is O(partitions)
-    * driver-sequential Spark jobs). Read-only once committed, so it is
-    * built once per JVM (the marker) and every pass re-runs its reads,
-    * merges and certifying requires against it. */
-  private def incrStatsFixture(s: SparkSession, d: String, prefix: String,
-      table: String)(stats: DataFrame => DataFrame): graft.io.IceLite = {
+  /** The two-snapshot fixture of `v_incremental`, `v_schema_evolve`,
+    * `v_drift_incr` and `v_profile_incr`: the sorted orgs split in half,
+    * snapshot 1 holds the first half, snapshot 2 appends the rest and
+    * carries the first half forward. Each era's partitions land the
+    * tables `tables(snap, rows)` builds from that era's `files` rows,
+    * which carry their org in `__org`, through the one-job bulk ingest
+    * (a per-partition loop is O(partitions) driver-sequential Spark
+    * jobs). Read-only once committed, so it is built once per JVM (the
+    * marker) and every pass re-runs its reads, merges and certifying
+    * requires against it. Returns the table and the (history, appended)
+    * org split, read back from the committed snapshots. */
+  private def twoSnapshotFixture(s: SparkSession, d: String, prefix: String)(
+      tables: (Long, DataFrame) => Map[String, DataFrame])
+      : (graft.io.IceLite, (Seq[String], Seq[String])) = {
     val root = tmpWorkDir(prefix, d)
     val marker = java.nio.file.Paths.get(root, "_FIXTURE_READY")
     val ice = new graft.io.IceLite(root)
@@ -177,9 +180,8 @@ object SparkEntry {
         require(newOrgs.nonEmpty, "corpus too small to split into an append")
         val fo = files.withColumn("__org", orgCol)
         def ingest(snap: Long, sel: Seq[String]): Unit = {
-          val sub = fo.filter(col("__org").isin(sel: _*))
           ice.ingestPartitionedTables(s, snap, "__org",
-            Map("files" -> sub, table -> stats(sub)))
+            tables(snap, fo.filter(col("__org").isin(sel: _*))))
           ()
         }
         ingest(1L, histOrgs)
@@ -190,7 +192,8 @@ object SparkEntry {
         java.nio.file.Files.writeString(marker, "")
       } finally { files.unpersist(); () }
     }
-    ice
+    val histOrgs = ice.snapshotParts(1L)
+    (ice, (histOrgs, ice.snapshotParts(2L).diff(histOrgs)))
   }
 
   private def listParquet(dir: java.nio.file.Path): Set[java.nio.file.Path] = {
@@ -456,39 +459,8 @@ object SparkEntry {
       // file is touched), and its violations unioned with the
       // already-committed history violations must hash-equal the batch
       // oracle over the FULL corpus: incremental == full recompute.
-      // r8: the two-snapshot table is read-only once committed — build
-      // once per JVM through the ONE-JOB ingest (ingestPartitionedTables;
-      // the per-org commit loop was O(orgs) sequential jobs), persist
-      // the org split in the marker, and re-run the incremental read +
-      // certifying requires every pass (VERDICT r7 #1/#8).
-      val root = tmpWorkDir("graft_incr", d)
-      val marker = java.nio.file.Paths.get(root, "_FIXTURE_READY")
-      val ice = new graft.io.IceLite(root)
-      val sep = "--NEW-ORGS--"
-      if (!java.nio.file.Files.exists(marker)) {
-        rmTree(java.nio.file.Paths.get(root))
-        val files = FilesTable.files(s, d).cache()
-        try {
-          val orgCol = Verdicts.org(col("repo"))
-          val orgs = files.select(orgCol.as("o")).distinct()
-            .collect().map(_.getString(0)).sorted.toSeq
-          val (histOrgs, newOrgs) = orgs.splitAt(math.max(1, orgs.length / 2))
-          require(newOrgs.nonEmpty, "corpus too small to split into an append")
-          val fo = files.withColumn("__org", orgCol)
-          ice.ingestPartitionedTables(s, 1L, "__org", Map("files" ->
-            fo.filter(col("__org").isin(histOrgs: _*))))
-          ice.commitSnapshot(1L, histOrgs)
-          ice.ingestPartitionedTables(s, 2L, "__org", Map("files" ->
-            fo.filter(col("__org").isin(newOrgs: _*))))
-          histOrgs.foreach(o => ice.carryForwardPartition(2L, o, 1L))
-          ice.commitSnapshot(2L, orgs)
-          java.nio.file.Files.writeString(marker,
-            (histOrgs ++ Seq(sep) ++ newOrgs).mkString("\n"))
-        } finally { files.unpersist(); () }
-      }
-      val newOrgs = java.nio.file.Files.readString(marker)
-        .split("\n").toSeq.dropWhile(_ != sep).drop(1)
-      require(newOrgs.nonEmpty, "fixture marker lost the org split")
+      val (ice, (_, newOrgs)) = twoSnapshotFixture(s, d, "graft_incr")(
+        (_, rows) => Map("files" -> rows))
       // history's violations: committed state in production (the
       // verdict store of snapshot 1); derived from snapshot 1's READ
       // here so the whole chain goes through the table layer
@@ -964,41 +936,15 @@ object SparkEntry {
       // rows carry typed NULLs — and hash-equals the oracle computing
       // the same union in SQL. The per-partition schema ledger rides
       // the lineage records, so the read touches no extra metadata.
-      // r8: read-only two-era fixture — built once per JVM through the
-      // one-job ingest (the per-org commit loop was O(orgs) sequential
-      // jobs); the evolved read + require run every pass (VERDICT r7
-      // #1/#8).
-      val root = tmpWorkDir("graft_evolve", d)
-      val marker = java.nio.file.Paths.get(root, "_FIXTURE_READY")
-      val ice = new graft.io.IceLite(root)
-      if (!java.nio.file.Files.exists(marker)) {
-        rmTree(java.nio.file.Paths.get(root))
-        val files = FilesTable.files(s, d).cache()
-        try {
-          val orgCol = Verdicts.org(col("repo"))
-          val orgs = files.select(orgCol.as("o")).distinct()
-            .collect().map(_.getString(0)).sorted.toSeq
-          val (histOrgs, newOrgs) = orgs.splitAt(math.max(1, orgs.length / 2))
-          require(newOrgs.nonEmpty, "corpus too small to split into an append")
-          val v1 = files.select(col("repo"), col("path"), col("commit"),
-            col("lang"), col("content_sha256"), col("doc_id"),
-            orgCol.as("__org"))
-          ice.ingestPartitionedTables(s, 1L, "__org", Map("files" ->
-            v1.filter(col("__org").isin(histOrgs: _*))))
-          ice.commitSnapshot(1L, histOrgs)
-          // era 2 adds a license column (deterministic by doc_id)
-          val v2 = files.select(col("repo"), col("path"), col("commit"),
-            col("lang"), col("content_sha256"), col("doc_id"),
-            when(col("doc_id") % 4 === 0, "mit")
-              .when(col("doc_id") % 4 === 1, "apache2")
-              .when(col("doc_id") % 4 === 2, "gpl3")
-              .otherwise("bsd").as("license"), orgCol.as("__org"))
-          ice.ingestPartitionedTables(s, 2L, "__org", Map("files" ->
-            v2.filter(col("__org").isin(newOrgs: _*))))
-          histOrgs.foreach(o => ice.carryForwardPartition(2L, o, 1L))
-          ice.commitSnapshot(2L, orgs)
-          java.nio.file.Files.writeString(marker, "")
-        } finally { files.unpersist(); () }
+      val (ice, _) = twoSnapshotFixture(s, d, "graft_evolve") { (snap, rows) =>
+        // era 2 adds a license column (deterministic by doc_id)
+        val license = when(col("doc_id") % 4 === 0, "mit")
+          .when(col("doc_id") % 4 === 1, "apache2")
+          .when(col("doc_id") % 4 === 2, "gpl3")
+          .otherwise("bsd").as("license")
+        Map("files" -> rows.select(
+          Seq("repo", "path", "commit", "lang", "content_sha256", "doc_id").map(col) ++
+            (if (snap == 2L) Seq(license) else Nil) :+ col("__org"): _*))
       }
       val ev = ice.readTableEvolved(s, 2L, "files")
       require(ev.columns.contains("license"),
@@ -1015,9 +961,9 @@ object SparkEntry {
       // "distribution-drift in a single aggregation pass per
       // partition", made incremental). Hash-matches the full-corpus
       // oracle computing the same cohorts in SQL.
-      val ice = incrStatsFixture(s, d, "graft_drift_incr", "__hist")(rows =>
-        graft.validate.IncrementalProfile.lengthHistogram(rows,
-          length(col("content")), FileRules.drift.bucketWidth, groupBy = Some("__org")))
+      val (ice, _) = twoSnapshotFixture(s, d, "graft_drift_incr")((_, rows) =>
+        Map("files" -> rows, "__hist" -> graft.validate.IncrementalProfile.lengthHistogram(
+          rows, length(col("content")), FileRules.drift.bucketWidth, groupBy = Some("__org"))))
       // history distribution: snapshot 1's histogram rows; appended
       // distribution: only the partitions NEW in snapshot 2
       val h0 = ice.readTable(s, 1L, "__hist")
@@ -1123,10 +1069,10 @@ object SparkEntry {
       // full-corpus oracle; the distinct-commit estimate merges via
       // hll_union_agg and is certified within 5% of the exact count
       // (approximate by design — DataSketches HLL, lgK 12).
-      val ice = incrStatsFixture(s, d, "graft_profile_incr", "__profile")(rows =>
-        graft.validate.IncrementalProfile.partitionProfile(rows,
-          nullCols = Seq("lang"), rangeCols = Seq("doc_id"),
-          distinctCols = Seq("commit"), groupBy = Some("__org")))
+      val (ice, _) = twoSnapshotFixture(s, d, "graft_profile_incr")((_, rows) =>
+        Map("files" -> rows, "__profile" -> graft.validate.IncrementalProfile.partitionProfile(
+          rows, nullCols = Seq("lang"), rangeCols = Seq("doc_id"),
+          distinctCols = Seq("commit"), groupBy = Some("__org"))))
       val prof = ice.readTable(s, 2L, "__profile")
       require(prof.inputFiles.nonEmpty &&
         prof.inputFiles.forall(_.contains("/__profile/")),

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   *
   * Every not-yet-committed partition is committed in ONE wave: each
   * table is built once, grouped by partition, over the input rows of
-  * the wave, so a run costs a constant number of Spark jobs and a
-  * constant number of scans of the cached input, however many
-  * partitions it commits. Crash and resume act on the wave: its staging
+  * the wave (the verdicts as one per-part aggregate with a counter per
+  * rule, [[Verdicts.compute]]), so a run costs a constant number of
+  * Spark jobs and a constant number of scans of the cached input,
+  * however many partitions it commits. Crash and resume act on the wave: its staging
   * writes are all-or-nothing (a crash there leaves no partition
   * committed), and the per-partition landing after them is resumable
   * (a crash there leaves some partitions committed, which the next run
@@ -69,9 +70,10 @@ object CheckpointedValidation {
         // metrics are BOUNDED (one row per part and profiled column):
         // collected once, they give each partition's input row count
         // (`n_rows`) without another scan, and are written from the
-        // driver. Verdicts are bounded too; both go through coalesce(1),
-        // one file per partition. Violations scale with the data and
-        // are written straight from the scan (no exchange).
+        // driver. Verdicts are bounded too, one grouped pass over the
+        // wave rows; both go through coalesce(1), one file per
+        // partition. Violations scale with the data and are written
+        // straight from the scan (no exchange).
         val metrics = Profile.columns(rows, profiled, exact = false,
           groupBy = Some("part"))
         val metricRows = metrics.collect()

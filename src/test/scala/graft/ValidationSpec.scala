@@ -157,6 +157,90 @@ class ValidationSpec extends AnyFunSuite {
     assert(v.filter(col("pass") && col("violation_count") =!= 0).count() === 0)
   }
 
+  test("verdicts: a repeated rule id is refused, naming the id") {
+    // `required: [repo, repo]` compiles to two rules with one id
+    val cls = SchemaLoader.loadClassYaml("$id: file\nrequired: [repo, repo]\n")
+    val rules = SchemaLoader.compileRules(cls, Set("repo")) ++ FileRules.rowRules
+    assert(rules.count(_.id == "file.required_repo") === 2)
+    val e = intercept[IllegalArgumentException](Verdicts.compute(spark, files, rules))
+    assert(e.getMessage.contains("file.required_repo"))
+    assert(!e.getMessage.contains("required_lang"))
+  }
+
+  test("verdicts and violations: no rules give no rows, with the usual schema") {
+    val verdicts = Verdicts.compute(spark, files, Nil)
+    val usual = Verdicts.compute(spark, files, FileRules.rowRules).schema
+    // committed lineage hashes the schema, nullability included
+    assert(usual.map(f => f.name -> f.nullable) === Seq("part" -> false,
+      "rule_id" -> true, "violation_count" -> false, "pass" -> false))
+    assert(verdicts.schema === usual)
+    assert(verdicts.collect().isEmpty)
+    val violations = Violations.extract(files, Nil)
+    assert(violations.schema === Violations.extract(files, FileRules.rowRules).schema)
+    assert(violations.collect().isEmpty)
+  }
+
+  test("verdicts: property — every (org, rule) cell holds the brute-force " +
+    "count, from at most 2 Spark jobs") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    // NULL in every rule column; the odd rule id exercises the quoting
+    // into the unpivot, and its `pass` is NULL on a NULL content
+    val odd = "len's `odd` \\ id"
+    val rules = Seq(
+      Required("required_repo", "repo"),
+      Required("required_lang", "lang"),
+      EnumIn("enum_lang", "lang", Seq("en", "fr")),
+      Pattern("pattern_content", "content", "^a+$"),
+      Check(odd, "content", length(col("content")) < 3))
+    def violates(id: String, repo: String, lang: String, content: String): Boolean =
+      id match {
+        case "required_repo" => repo == null
+        case "required_lang" => lang == null
+        case "enum_lang" => lang != null && !Set("en", "fr")(lang)
+        case "pattern_content" => content != null && !content.matches("a+")
+        case `odd` => content != null && content.length >= 3
+      }
+    def orgOf(repo: String): String =
+      if (repo == null) "__null__"
+      else repo.split("/", -1).head match { case "" => "__empty__"; case o => o }
+    // path and commit only ride along, as in a files table
+    val schema = StructType(Seq("repo", "path", "commit", "lang", "content")
+      .map(StructField(_, StringType)))
+    val recorder = new GroupJobs
+    spark.sparkContext.addSparkListener(recorder)
+    try (1 to 6).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
+      val rows = Seq.fill(50 + rnd.nextInt(250)) {
+        val repo = rnd.nextInt(10) match {
+          case 0 | 1 | 2 => "hot/r" // a 30%-hot org
+          case 3 => pick(null, "/x", "")
+          case _ => s"o${rnd.nextInt(6)}/r${rnd.nextInt(3)}"
+        }
+        (repo, pick(null, "en", "fr", "de"), pick(null, "", "a", "aa", "aaa", "ab"))
+      }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.zipWithIndex.map { case ((r, l, c), i) => Row(r, s"src/f$i.py", s"c$i", l, c) }, 3),
+        schema)
+      val expected = (for {
+        part <- rows.map(r => orgOf(r._1)).distinct
+        r <- rules
+      } yield (part, r.id) -> rows.count { case (repo, l, c) =>
+        orgOf(repo) == part && violates(r.id, repo, l, c)
+      }.toLong).toMap
+      var got = Array.empty[Row]
+      val jobs = recorder.jobsOf(s"verdicts-$seed") {
+        got = Verdicts.compute(spark, df, rules).collect()
+      }
+      assert(jobs <= 2, s"seed $seed: $jobs jobs")
+      assert(got.length === expected.size, s"seed $seed: one cell per (org, rule)")
+      assert(got.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap ===
+        expected, s"seed $seed")
+      assert(got.forall(r => r.getBoolean(3) == (r.getLong(2) == 0L)))
+    } finally spark.sparkContext.removeSparkListener(recorder)
+  }
+
   test("referential: NULL foreign keys are NOT orphans (Required's finding, " +
     "and the SQL NOT-IN oracle's semantics)") {
     import spark.implicits._

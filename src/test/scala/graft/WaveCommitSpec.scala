@@ -5,7 +5,6 @@ import graft.io.IceLite
 import graft.rules.FileRules
 import graft.synth.FilesTable
 import graft.validate.{CheckpointedValidation, Verdicts, Violations}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.json4s._
@@ -30,33 +29,6 @@ class WaveCommitSpec extends AnyFunSuite {
       pmod(xxhash64(col("path"), col("commit")), lit(orgs)).cast("string"),
       lit("/r")))
 
-  /** Counts the jobs started under one job group. */
-  private final class GroupJobs extends SparkListener {
-    private val seen = scala.collection.mutable.Buffer.empty[String]
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      seen += Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-      notifyAll()
-    }
-    /** Jobs of `group`, once a job of `fence` (started after it) arrived:
-      * listener events arrive in order on one queue. */
-    def count(group: String, fence: String): Int = synchronized {
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains(fence) && System.nanoTime() < deadline) wait(100)
-      assert(seen.contains(fence), "listener events did not drain in 60 s")
-      seen.count(_ == group)
-    }
-  }
-
-  private def jobsOf(recorder: GroupJobs, tag: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$tag-end", "fence")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    recorder.count(tag, s"$tag-end")
-  }
-
   private def lineageBytes(ice: IceLite, snap: Long): Map[String, (Seq[Byte], Long)] = {
     val dir = ice.lineageDir(snap)
     ice.completedParts(snap).toSeq.map { p =>
@@ -73,10 +45,10 @@ class WaveCommitSpec extends AnyFunSuite {
     try {
       assert(two.select(Verdicts.org(col("repo"))).distinct().count() === 2)
       assert(eight.select(Verdicts.org(col("repo"))).distinct().count() === 8)
-      val j2 = jobsOf(recorder, "wave-2") {
+      val j2 = recorder.jobsOf("wave-2") {
         CheckpointedValidation.run(spark, two, FileRules.rowRules, freshRoot())
       }
-      val j8 = jobsOf(recorder, "wave-8") {
+      val j8 = recorder.jobsOf("wave-8") {
         CheckpointedValidation.run(spark, eight, FileRules.rowRules, freshRoot())
       }
       assert(j2 > 0)
