@@ -97,7 +97,7 @@ object SparkEntry {
   /** The reference's public gdc test corpus (read-only) — used by the
     * non-toy graph-emission query; both the Spark reader and the DuckDB
     * oracle parse the same raw bytes. */
-  private val gdcDir = "/root/reference/test/resources"
+  private[graft] val gdcDir = "/root/reference/test/resources"
 
   /** documents + planted near-dups (every 25th doc re-appended with a
     * ' zz' suffix) — the shared corpus of the dedup queries, mirrored
@@ -218,19 +218,21 @@ object SparkEntry {
     parts
   }
 
-  /** Run `body` with spark.sql.shuffle.partitions temporarily set to
-    * `n` — stateful-streaming sizing: the state store creates AND
-    * commits one partition per shuffle partition per micro-batch, so a
-    * small-keyspace stateful query at the session default of 32 pays
-    * 32 state commits per batch for a handful of keys. Real deployments
-    * size state partitions to the keyspace; this is that knob. Queries
-    * run sequentially through Verify/Bench, so the shared-conf toggle
-    * is safe (restored in finally). */
-  private def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
+  /** A new session on the caller's SparkContext with
+    * spark.sql.shuffle.partitions = 4, for the stateful stream queries:
+    * the state store creates AND commits one partition per shuffle
+    * partition per micro-batch, so a small-keyspace stateful query at
+    * the session default of 32 pays 32 state commits per batch for a
+    * handful of keys. Real deployments size state partitions to the
+    * keyspace; this is that knob. Setting it on a session of its own
+    * leaves the caller's conf untouched, which every other thread on
+    * the caller's session would otherwise see while the stream runs. A
+    * memory sink registers its view in the session that started the
+    * stream, so the sink is read through this one too. */
+  private def stateSession(s: SparkSession): SparkSession = {
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    ss
   }
 
   /** MinHash-LSH candidates verified at jaccard >= 0.8 over [[augDocs]].
@@ -498,17 +500,15 @@ object SparkEntry {
       // a handful of rule keys: size the state store to the keyspace
       // (32 default partitions = 32 state commits per batch for ~5 keys)
       val qname = "v_stream_totals_sink"
-      withShufflePartitions(s, 4) {
-        val stream = graft.streaming.StreamValidate.violationStream(
-          s, dir, schema, FileRules.rowRules, maxFilesPerTrigger = Some(4))
-        val totals = graft.streaming.StreamValidate.statefulRuleTotals(stream)
-        s.catalog.dropTempView(qname)
-        val q = totals.writeStream.format("memory").queryName(qname)
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val sink = s.table(qname)
+      val ss = stateSession(s)
+      val stream = graft.streaming.StreamValidate.violationStream(
+        ss, dir, schema, FileRules.rowRules, maxFilesPerTrigger = Some(4))
+      val totals = graft.streaming.StreamValidate.statefulRuleTotals(stream)
+      totals.writeStream.format("memory").queryName(qname)
+        .outputMode("update")
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+      val sink = ss.table(qname)
       val bad = sink.groupBy(col("rule_id"))
         .agg(max(col("total")).as("final_total"),
           sum(col("batch_inc")).as("inc_sum"))
@@ -575,16 +575,14 @@ object SparkEntry {
       // 4 state partitions, not the batch default of 32 (each is a
       // per-micro-batch state-store commit)
       val qname = "v_stream_window_sink"
-      withShufflePartitions(s, 4) {
-        val stream = graft.streaming.StreamValidate.windowedEventAgg(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", "3").parquet(dir),
-          "1 hour", "1 hour", "10 minutes")
-        s.catalog.dropTempView(qname)
-        val q = graft.streaming.StreamValidate.toMemorySink(stream, qname, "append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(qname)
+      val ss = stateSession(s)
+      val stream = graft.streaming.StreamValidate.windowedEventAgg(
+        ss.readStream.schema(schema).option("maxFilesPerTrigger", "3").parquet(dir),
+        "1 hour", "1 hour", "10 minutes")
+      graft.streaming.StreamValidate.toMemorySink(stream, qname, "append")
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+      ss.table(qname)
         .select(col("w_start").cast("timestamp_ntz").as("w_start"),
           col("w_end").cast("timestamp_ntz").as("w_end"),
           col("event_type"), col("n"), col("value_sum"))
@@ -632,22 +630,20 @@ object SparkEntry {
       val schema = s.read.parquet(dir).schema
       val qname = "v_stream_dedup_sink"
       // ~500 digest keys: size the state store to the keyspace
-      withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(dir)
-        val deduped = graft.streaming.StreamValidate
-          .streamingDedup(stream, "text", "ts")
-        s.catalog.dropTempView(qname)
-        val q = graft.streaming.StreamValidate
-          .toMemorySink(deduped, qname, "append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      val ss = stateSession(s)
+      val stream = ss.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "2").parquet(dir)
+      val deduped = graft.streaming.StreamValidate
+        .streamingDedup(stream, "text", "ts")
+      graft.streaming.StreamValidate
+        .toMemorySink(deduped, qname, "append")
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
       val uniq = t(s, d, "documents").groupBy(col("text"))
         .agg(min(col("doc_id")).as("doc_id"))
       val nDocs = uniq.count()
       val nIn = nDocs + uniq.filter(col("doc_id") % 5 === 0).count()
-      val out = s.table(qname)
+      val out = ss.table(qname)
       // the stream must actually have FACED duplicates and dropped them
       require(out.count() < nIn,
         s"dedup dropped nothing: $nIn rows in, ${out.count()} out")
@@ -676,8 +672,9 @@ object SparkEntry {
         .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))
       docs.repartition(4).write.mode("overwrite").parquet(src)
       val schema = s.read.parquet(src).schema
+      val ss = stateSession(s)
       def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
-        val stream = s.readStream.schema(schema)
+        val stream = ss.readStream.schema(schema)
           .option("maxFilesPerTrigger", "2").parquet(src)
         val q = graft.streaming.StreamValidate
           .streamingDedup(stream, "text", "ts")
@@ -687,17 +684,15 @@ object SparkEntry {
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination(); q
       }
-      withShufflePartitions(s, 4) {
-        drain() // phase 1: originals only — state = their digests
-        val dups = docs.filter(col("doc_id") % 5 === 0)
-          .withColumn("doc_id", col("doc_id") + 1000000)
-        dups.repartition(2).write.mode("append").parquet(src)
-        val q2 = drain() // phase 2: resume; dups dropped via restored state
-        val inc = q2.recentProgress.map(_.numInputRows).sum
-        val nDups = dups.count()
-        require(inc == nDups,
-          s"resume reprocessed drained files: saw $inc rows, expected $nDups")
-      }
+      drain() // phase 1: originals only — state = their digests
+      val dups = docs.filter(col("doc_id") % 5 === 0)
+        .withColumn("doc_id", col("doc_id") + 1000000)
+      dups.repartition(2).write.mode("append").parquet(src)
+      val q2 = drain() // phase 2: resume; dups dropped via restored state
+      val inc = q2.recentProgress.map(_.numInputRows).sum
+      val nDups = dups.count()
+      require(inc == nDups,
+        s"resume reprocessed drained files: saw $inc rows, expected $nDups")
       val out = s.read.parquet(sink)
       require(out.count() == docs.count(),
         s"restored state failed to drop duplicates: ${out.count()} rows")
@@ -763,18 +758,16 @@ object SparkEntry {
       }
       val schema = s.read.parquet(dir).schema
       val qname = "v_stream_late_sink"
-      withShufflePartitions(s, 4) {
-        val stream = graft.streaming.StreamValidate.windowedEventAgg(
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(dir),
-          "1 hour", "1 hour", "600999 milliseconds")
-        s.catalog.dropTempView(qname)
-        val q = graft.streaming.StreamValidate
-          .toMemorySink(stream, qname, "append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val admitted = s.table(qname).agg(
+      val ss = stateSession(s)
+      val stream = graft.streaming.StreamValidate.windowedEventAgg(
+        ss.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(dir),
+        "1 hour", "1 hour", "600999 milliseconds")
+      graft.streaming.StreamValidate
+        .toMemorySink(stream, qname, "append")
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+      val admitted = ss.table(qname).agg(
         sum(col("n")).cast(LongType)).collect()(0).getLong(0)
       val nAll = t(s, d, "events").count()
       val nEven = t(s, d, "events").filter(col("event_id") % 2 === 0).count()
@@ -785,7 +778,7 @@ object SparkEntry {
         s"no late rows were dropped ($admitted of $nAll admitted)")
       require(admitted >= nEven,
         s"in-order rows went missing ($admitted admitted < $nEven even rows)")
-      s.table(qname)
+      ss.table(qname)
         .select(col("w_start").cast("timestamp_ntz").as("w_start"),
           col("w_end").cast("timestamp_ntz").as("w_end"),
           col("event_type"), col("n"), col("value_sum"))
@@ -1451,8 +1444,8 @@ object SparkEntry {
         col("doc_id") % 2 === 0)
     }),
     "v_salted_hot" -> ((s, d) =>
-      // auto-detects the planted 30%-hot repo and routes through the
-      // two-phase salted plan (countByKeyAuto -> isSkewed -> countByKey)
+      // the planted 30%-hot repo through the two-phase salted plan,
+      // which countByKeyAuto runs on every call
       SaltedAgg.countByKeyAuto(FilesTable.files(s, d), Seq("repo"))),
     "d_simhash_pairs" -> ((s, d) =>
       // spread: the simhash evaluation runs pre-shuffle on the single

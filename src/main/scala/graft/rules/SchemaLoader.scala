@@ -109,11 +109,12 @@ object SchemaLoader {
   /** Compile a class into row rules over the columns actually present.
     * JSON-Schema semantics: `required` = present; a type union with
     * 'null' admits null, so Required is only emitted for non-nullable
-    * required fields. `$ref` properties are opaque (checked by their
-    * own class). */
+    * required fields, once per name however often it is listed (rule
+    * ids name verdict cells, so they must be unique). `$ref`
+    * properties are opaque (checked by their own class). */
   def compileRules(cls: SchemaClass, presentCols: Set[String]): Seq[RowRule] = {
     val cols = cls.properties.view.filterKeys(presentCols).toMap
-    val required = cls.required.filter(presentCols)
+    val required = cls.required.distinct.filter(presentCols)
       .filter(c => !cols.get(c).exists(_.types.contains("null")))
       .map(c => Required(s"${cls.id}.required_$c", c))
     val patterns = cols.collect { case (c, p) if p.pattern.isDefined =>

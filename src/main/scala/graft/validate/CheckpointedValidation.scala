@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
   * committed.
   *
   * Every not-yet-committed partition is committed in ONE wave: each
-  * table is built once, grouped by partition, over the input rows of
-  * the wave (the verdicts as one per-part aggregate with a counter per
-  * rule, [[Verdicts.compute]]), so a run costs a constant number of
-  * Spark jobs and a constant number of scans of the cached input,
-  * however many partitions it commits. Crash and resume act on the wave: its staging
+  * table is built once, grouped by partition (the verdicts as one
+  * per-part aggregate with a counter per rule, [[Verdicts.compute]]),
+  * so a run costs a constant number of Spark jobs and a constant number
+  * of scans of the cached input, however many partitions it commits.
+  * The partition list comes from the per-part metrics aggregate, which
+  * runs over every cached row; verdicts and violations read only the
+  * wave's rows. Crash and resume act on the wave: its staging
   * writes are all-or-nothing (a crash there leaves no partition
   * committed), and the per-partition landing after them is resumable
   * (a crash there leaves some partitions committed, which the next run
@@ -52,8 +54,6 @@ object CheckpointedValidation {
       files.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val cached = if (alreadyCached) files else files.cache()
     try {
-      val parts = cached.select(orgCol.as("part")).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
       // state another operation (a crashed compaction) left under the
       // same in-progress id is NOT this run's completed work: skipping
       // its partitions would publish that operation's partial output
@@ -63,28 +63,33 @@ object CheckpointedValidation {
       ice.inProgressOp(snap).filter(_ != "ingest").foreach(op => sys.error(
         s"snapshot $snap holds in-progress state from operation '$op': " +
           "resume or discard that operation first (IceLite.discardInProgress)"))
+      // metrics are BOUNDED (one row per part and profiled column), so
+      // they are collected once over every cached row: their rows list
+      // the partitions without a scan of their own, give each
+      // partition's input row count (`n_rows`), and are written from the
+      // driver. HLL++ registers are per group, so a partition's row
+      // does not depend on which other partitions the pass covered.
+      val metrics = Profile.columns(cached.withColumn("part", orgCol), profiled,
+        exact = false, groupBy = Some("part"))
+      val metricRows = metrics.collect()
+      val parts = metricRows.map(_.getString(0)).distinct.sorted.toSeq
       val todo = parts.filterNot(ice.completedParts(snap))
       val wave = crashAfter.fold(todo)(todo.take)
       if (wave.nonEmpty) {
+        val inWave = wave.toSet
+        val waveMetrics = metricRows.filter(r => inWave(r.getString(0)))
         val rows = cached.filter(orgCol.isin(wave: _*)).withColumn("part", orgCol)
-        // metrics are BOUNDED (one row per part and profiled column):
-        // collected once, they give each partition's input row count
-        // (`n_rows`) without another scan, and are written from the
-        // driver. Verdicts are bounded too, one grouped pass over the
-        // wave rows; both go through coalesce(1), one file per
-        // partition. Violations scale with the data and are written
-        // straight from the scan (no exchange).
-        val metrics = Profile.columns(rows, profiled, exact = false,
-          groupBy = Some("part"))
-        val metricRows = metrics.collect()
-        val counts = metricRows.map(r => r.getString(0) -> r.getLong(2)).toMap
+        // verdicts are bounded too, one grouped pass over the wave rows;
+        // both go through coalesce(1), one file per partition.
+        // Violations scale with the data and are written straight from
+        // the scan (no exchange).
         ice.commitParts(snap, "part", Map(
           "verdicts" -> Verdicts.compute(spark, rows, rules).coalesce(1),
           "violations" -> Violations.extract(rows, rules)
             .withColumn("part", orgCol),
           "metrics" -> spark.createDataFrame(
-            java.util.Arrays.asList(metricRows: _*), metrics.schema).coalesce(1)),
-          counts)
+            java.util.Arrays.asList(waveMetrics: _*), metrics.schema).coalesce(1)),
+          waveMetrics.map(r => r.getString(0) -> r.getLong(2)).toMap)
       }
       if (wave.size < todo.size) throw new SimulatedCrash
       ice.commitSnapshot(snap, parts)

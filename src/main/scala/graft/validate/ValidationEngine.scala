@@ -20,8 +20,9 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, LongType, 
   *  - [[Uniqueness]] shuffles once on the full composite key (high
   *    cardinality ⇒ well distributed). [[Verdicts]] is one per-org
   *    aggregate whose map-side partial counts bound a 30%-hot org;
-  *    [[SaltedAgg]] two-phase salting is for skewed keys whose partial
-  *    buffers do not.
+  *    [[SaltedAgg]] counts per key through two-phase salting on every
+  *    call, so a hot key costs no probe scan to detect: the skew is
+  *    spread inside the job that runs.
   *  - [[Referential.orphans]] picks broadcast vs shuffle join from the
   *    dimension's size, mirroring the north rule's "broadcast or
   *    sort-merge chosen by cardinality stats".
@@ -59,27 +60,29 @@ object Violations {
     violations.orderBy((("rule_id" +: keyCols) :+ "col_name").map(col): _*)
 }
 
-/** Two-phase salted aggregation for skewed low-cardinality group keys.
-  * Phase 1 pre-aggregates on (key, salt) spreading a hot key over
-  * `salts` reducers; phase 2 merges per key. Spark's partial (map-side)
-  * aggregation already bounds skew for simple counts; the explicit salt
-  * guards high-cardinality-per-group aggregates (e.g. distinct-ish
-  * payloads) where partial agg buffers blow up on the hot reducer.
+/** Two-phase salted count per key, the explicit skew handling for hot
+  * repos: phase 1 pre-aggregates on (key, salt), spreading a hot key
+  * over 32 reducers; phase 2 merges per key. The salted plan always
+  * runs, with no decision first: a probe that picks the plan is a
+  * sampled scan of its own, 3–4 Spark jobs ahead of the count's 3,
+  * while on a balanced key the salt only splits each group into at most
+  * 32 partial counts that the second phase merges. Rebalancing inside the
+  * job that runs, not probing before it, is DS2's argument (ICDE 2021,
+  * PAPERS.md). [[isSkewed]] stays as a diagnostic.
   */
 object SaltedAgg {
-  def countByKey(df: DataFrame, keys: Seq[String], salts: Int = 32): DataFrame = {
+  private val Salts = 32
+
+  def countByKeyAuto(df: DataFrame, keys: Seq[String]): DataFrame =
     // rand-based salt, NOT a content hash: a key hot because one
     // byte-identical row repeats collapses a content-derived salt to a
     // single value and recreates the skew wholesale. Counts are
     // insensitive to WHICH salt a row lands on (each row counts once
     // under any assignment), so rand's retry-nondeterminism is harmless
     // here — it only redistributes the partial groups.
-    val salted = df.withColumn("_salt",
-      floor(rand(42) * salts).cast("int"))
-    salted
+    df.withColumn("_salt", floor(rand(42) * Salts).cast("int"))
       .groupBy((keys.map(col) :+ col("_salt")): _*).agg(count(lit(1)).as("_partial"))
       .groupBy(keys.map(col): _*).agg(sum(col("_partial")).cast(LongType).as("n_rows"))
-  }
 
   /** Cheap skew sketch: does one key group hold ≥ `hotShare` of a
     * seeded ~1/`frac` Bernoulli row sample? `df.sample` (seeded) rather
@@ -90,12 +93,8 @@ object SaltedAgg {
     * would keep all-or-none of every key and see no skew at all. The
     * Bernoulli sample is per-row regardless of content, and its
     * predicate references no columns, so the probe scan prunes down to
-    * the key columns only — at 100 TB a narrow 1% columnar scan, far
-    * cheaper than letting a 30%-hot reducer spill. (Seeded sample is
-    * reproducible per partition layout; a task-retry reshuffle could at
-    * worst flip the PLAN choice, never the result.) Stats-fed callers
-    * that already know the answer should call [[countByKey]] / the
-    * plain groupBy directly and skip the probe. */
+    * the key columns only. A diagnostic: [[countByKeyAuto]] does not
+    * call it. */
   def isSkewed(df: DataFrame, keys: Seq[String], hotShare: Double = 0.2,
       frac: Int = 100): Boolean = {
     val sampled =
@@ -109,16 +108,6 @@ object SaltedAgg {
     !r.isNullAt(0) && r.getLong(1) > 0 &&
       r.getLong(0).toDouble / r.getLong(1) >= hotShare
   }
-
-  /** [[countByKey]] that decides salting ITSELF: a hot key above
-    * `hotShare` of the sampled rows routes through the two-phase salted
-    * plan, a balanced key distribution keeps the plain single-shuffle
-    * aggregate (identical output either way — only the plan differs). */
-  def countByKeyAuto(df: DataFrame, keys: Seq[String], salts: Int = 32,
-      hotShare: Double = 0.2, frac: Int = 100): DataFrame =
-    if (isSkewed(df, keys, hotShare, frac)) countByKey(df, keys, salts)
-    else df.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).cast(LongType).as("n_rows"))
 }
 
 /** Uniqueness on a composite key: groups with >1 row are violations.

@@ -80,6 +80,18 @@ class SchemaLoaderSpec extends AnyFunSuite {
       "file.type_size"))
   }
 
+  test("a name listed twice under required compiles to one rule, which " +
+    "verdicts accept") {
+    val twice = SchemaLoader.loadClassYaml("$id: file\nrequired: [repo, repo, lang]\n")
+    val rules = SchemaLoader.compileRules(twice, Set("repo", "lang"))
+    assert(rules.map(_.id) === Seq("file.required_repo", "file.required_lang"))
+    val df = Seq(("o/r", "en"), (null, "en"), ("o/r", null)).toDF("repo", "lang")
+    val cells = graft.validate.Verdicts.compute(spark, df, rules).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(cells === Map(("o", "file.required_repo") -> 0L, ("o", "file.required_lang") -> 1L,
+      ("__null__", "file.required_repo") -> 1L, ("__null__", "file.required_lang") -> 0L))
+  }
+
   test("schema-driven graph emission renders href targets; orphans detected") {
     val files = Seq(("f1", "r1"), ("f2", "r1"), ("f3", "rMISSING"))
       .toDF("id", "repo_id")

@@ -12,6 +12,22 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamingSpec extends AnyFunSuite {
   import TestSpark._
 
+  test("v_stream_totals leaves the caller's session conf untouched while it runs") {
+    // the caller's own session, at a value the stream's state sizing does not use
+    val key = "spark.sql.shuffle.partitions"
+    val caller = spark.newSession()
+    caller.conf.set(key, "3")
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var running = true
+    val poller = new Thread(() =>
+      while (running) { seen.add(caller.conf.get(key)); Thread.sleep(1) })
+    poller.start()
+    val totals = try SparkEntry.queries("v_stream_totals")(caller, sf).collect()
+      finally { running = false; poller.join() }
+    assert(totals.nonEmpty)
+    assert(seen.toArray.toSet === Set("3"))
+  }
+
   test("violation stream over a growing parquet dir matches batch result") {
     val dir = Files.createTempDirectory("stream").toString
     val files = FilesTable.files(spark, sf).drop("doc_id")

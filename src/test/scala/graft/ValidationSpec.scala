@@ -158,10 +158,8 @@ class ValidationSpec extends AnyFunSuite {
   }
 
   test("verdicts: a repeated rule id is refused, naming the id") {
-    // `required: [repo, repo]` compiles to two rules with one id
-    val cls = SchemaLoader.loadClassYaml("$id: file\nrequired: [repo, repo]\n")
-    val rules = SchemaLoader.compileRules(cls, Set("repo")) ++ FileRules.rowRules
-    assert(rules.count(_.id == "file.required_repo") === 2)
+    val rules = Seq(Required("file.required_repo", "repo"),
+      Required("file.required_repo", "repo")) ++ FileRules.rowRules
     val e = intercept[IllegalArgumentException](Verdicts.compute(spark, files, rules))
     assert(e.getMessage.contains("file.required_repo"))
     assert(!e.getMessage.contains("required_lang"))
@@ -255,36 +253,67 @@ class ValidationSpec extends AnyFunSuite {
   test("salted aggregation agrees with the direct group-by under skew") {
     val direct = files.groupBy("repo").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = SaltedAgg.countByKey(files, Seq("repo"))
+    val salted = SaltedAgg.countByKeyAuto(files, Seq("repo"))
       .collect().map(r => r.getString(0) -> r.getAs[Long]("n_rows")).toMap
     assert(salted === direct)
     // the fixture really is skewed: hot repo holds ~30%
     assert(direct("bigorg/monorepo").toDouble / 505 > 0.25)
   }
 
-  test("auto-salting: skew sketch routes the hot fixture through SaltedAgg, " +
-    "balanced keys keep the plain aggregate — identical output either way") {
-    // frac=1 samples every row: exact decision on the small fixture
-    // (production default 100 ~ a 1% deterministic full-row-hash sample)
+  test("auto-salting: hot and balanced keys count through the salted plan") {
+    // frac=1 samples every row: the diagnostic's exact answer on the
+    // small fixture (production default 100 ~ a 1% seeded sample)
     assert(SaltedAgg.isSkewed(files, Seq("repo"), frac = 1))
-    val auto = SaltedAgg.countByKeyAuto(files, Seq("repo"), frac = 1)
-    // routed through the two-phase salted plan: the _salt stage survives
-    // into the optimized plan
+    val auto = SaltedAgg.countByKeyAuto(files, Seq("repo"))
+    // the two-phase salted plan: the _salt stage survives into the
+    // optimized plan (its output is checked in the test above)
     assert(auto.queryExecution.optimizedPlan.toString.contains("_salt"))
-    val direct = files.groupBy("repo").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(auto.collect().map(r => r.getString(0) -> r.getAs[Long]("n_rows")).toMap
-      === direct)
-    // balanced keys: one row per (repo,path,commit) triple is unique-ish
-    // per key -> no hot group -> plain single-shuffle plan, same output
+    // balanced keys: one row per (repo, path) is unique-ish per key, no
+    // hot group; the salted plan gives the plain aggregate's output
     val balanced = files.withColumn("k",
       concat(col("repo"), lit("/"), col("path")))
     assert(!SaltedAgg.isSkewed(balanced, Seq("k"), frac = 1))
-    val plain = SaltedAgg.countByKeyAuto(balanced, Seq("k"), frac = 1)
-    assert(!plain.queryExecution.optimizedPlan.toString.contains("_salt"))
-    assert(plain.collect().map(r => r.getString(0) -> r.getAs[Long]("n_rows")).toMap
+    val salted = SaltedAgg.countByKeyAuto(balanced, Seq("k"))
+    assert(salted.collect().map(r => r.getString(0) -> r.getAs[Long]("n_rows")).toMap
       === balanced.groupBy("k").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+  }
+
+  test("salted count: property — every key's count equals a plain tally, " +
+    "NULL keys included, from at most 3 Spark jobs") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val schema = StructType(Seq("repo", "lang").map(StructField(_, StringType)))
+    val recorder = new GroupJobs
+    spark.sparkContext.addSparkListener(recorder)
+    // seed 0 is the empty frame; even seeds carry a 30%-hot key, odd
+    // seeds a balanced high-cardinality one; every third seed counts by
+    // a two-column key
+    try (0 to 7).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val rows = Seq.fill(if (seed == 0) 0 else 200 + rnd.nextInt(600)) {
+        val repo = rnd.nextInt(20) match {
+          case 0 => null
+          case k if seed % 2 == 0 && k < 7 => "hot/r"
+          case _ if seed % 2 == 1 => s"o${rnd.nextInt(100000)}/r"
+          case _ => s"o${rnd.nextInt(8)}/r"
+        }
+        (repo, Seq(null, "en", "fr")(rnd.nextInt(3)))
+      }
+      val keys = if (seed % 3 == 0) Seq("repo", "lang") else Seq("repo")
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.map { case (r, l) => Row(r, l) }, 3), schema)
+      val expected = rows.groupBy { case (r, l) => Seq(r, l).take(keys.size) }
+        .map { case (k, rs) => k -> rs.size.toLong }
+      var got = Array.empty[Row]
+      val jobs = recorder.jobsOf(s"salted-$seed") {
+        got = SaltedAgg.countByKeyAuto(df, keys).collect()
+      }
+      assert(jobs <= 3, s"seed $seed: $jobs jobs")
+      assert(got.length === expected.size, s"seed $seed: one row per key")
+      assert(got.map(r => keys.indices.map(r.getString) -> r.getLong(keys.size)).toMap ===
+        expected, s"seed $seed")
+    } finally spark.sparkContext.removeSparkListener(recorder)
   }
 }
 
