@@ -796,7 +796,7 @@ object SparkEntry {
       val root: String = tmpWorkDir("graft_resume", d)
       rmTree(java.nio.file.Paths.get(root))
       // cached by the CALLER so the crash run and the resume share one
-      // materialization (run() respects a pre-persisted frame);
+      // materialization (run() persists nothing itself);
       // unpersisted in finally — a require() failure must not leave the
       // whole corpus pinned for every subsequent query of the run
       val files = FilesTable.files(s, d).cache()

@@ -62,10 +62,15 @@ object GraftFunctions {
       (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         SimHash64(es.head)))
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
+  /** Idempotent per-session registration: a name whose registered
+    * function is already ours (from [[GraftExtensions]] or an earlier
+    * call) is left as it is; a foreign function of the same name is
+    * replaced. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     descriptions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(id.funcName, builder, "built-in")
+      if (!registry.lookupFunction(id).exists(_.getClassName == info.getClassName))
+        registry.registerFunction(id, info, builder)
     }
+  }
 }

@@ -211,6 +211,9 @@ object Referential {
   * `groupBy` names a column to profile by: one row per (group, column),
   * the group column first. HLL++ registers merge by max, so a group's
   * `n_distinct` equals that of the group's rows profiled alone.
+  * [[CheckpointedValidation]] runs the same aggregates next to
+  * [[Verdicts]]' counters in one grouped pass, and unpivots the
+  * collected rows through the same code, so the two share one schema.
   */
 object Profile {
   /** Backtick-quote an identifier / single-quote a string literal for
@@ -223,7 +226,16 @@ object Profile {
   def columns(df: DataFrame, cols: Seq[String], exact: Boolean = true,
       groupBy: Option[String] = None): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
-    val aggs = cols.flatMap { c =>
+    val aggs = aggregates(cols, exact)
+    val keys = groupBy.toSeq.map(c => col(bq(c)))
+    unpivot(df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*), keys, cols)
+  }
+
+  /** The profile's aggregate columns: the row count `__n`, then four
+    * per profiled column. [[CheckpointedValidation]] runs them in the
+    * same `groupBy` as the verdict counters. */
+  private[validate] def aggregates(cols: Seq[String], exact: Boolean): Seq[Column] =
+    count(lit(1)).as("__n") +: cols.flatMap { c =>
       val v = col(bq(c))
       Seq(
         count(v).as(s"${c}__nn"),
@@ -234,8 +246,10 @@ object Profile {
         min(length(v)).cast(LongType).as(s"${c}__minl"),
         max(length(v)).cast(LongType).as(s"${c}__maxl"))
     }
-    val keys = groupBy.toSeq.map(c => col(bq(c)))
-    val row = df.groupBy(keys: _*).agg(count(lit(1)).as("__n"), aggs: _*)
+
+  /** [[aggregates]]' row (`keys`, then any other columns, ignored) to one
+    * row per (keys…, column): the profile's one output schema. */
+  private[validate] def unpivot(row: DataFrame, keys: Seq[Column], cols: Seq[String]): DataFrame = {
     // identifiers/literals are quoted into the stack expr — a column
     // named `content-type` or `a.b` must not parse as arithmetic/field
     // access (lengthQuantiles documents the same hazard)
@@ -434,6 +448,9 @@ object DriftCheck {
   * with violation counts and pass flags — including all-pass cells —
   * from one grouped pass with a counter per rule, as the reference's
   * `objectValidate` counts (transform/object_validate.go:86).
+  * [[CheckpointedValidation]] runs the same counters in the grouped pass
+  * that profiles each partition, and unpivots the collected rows
+  * through the same code, so the two share one schema.
   */
 object Verdicts {
   /** Partition key of a repo: its org, the part before the first `/`.
@@ -456,24 +473,39 @@ object Verdicts {
     * as in [[Violations.extract]]. Rule ids name the cells, so a
     * repeated id is refused. */
   def compute(spark: SparkSession, files: DataFrame, rules: Seq[RowRule]): DataFrame = {
+    val part = org(col("repo")).as("part")
+    if (rules.isEmpty) unpivot(files.select(part), rules)
+    else {
+      val cs = counters(rules)
+      unpivot(files.groupBy(part).agg(cs.head, cs.tail: _*), rules)
+    }
+  }
+
+  /** One `count_if(!pass)` per rule, the aggregate columns of
+    * [[compute]]. [[CheckpointedValidation]] runs them in the same
+    * `groupBy` as the profile's aggregates. */
+  private[validate] def counters(rules: Seq[RowRule]): Seq[Column] = {
     val ids = rules.map(_.id)
     val repeated = ids.diff(ids.distinct).distinct
     require(repeated.isEmpty, s"duplicate rule ids: ${repeated.mkString(", ")}")
+    rules.zipWithIndex.map { case (r, i) => count_if(!r.pass).as(s"__v$i") }
+  }
+
+  /** [[counters]]' row (`part`, then any other columns, ignored) to one
+    * row per (part, rule): the verdicts' one output schema. */
+  private[validate] def unpivot(row: DataFrame, rules: Seq[RowRule]): DataFrame =
     if (rules.isEmpty) // `stack(0, …)` does not parse; the same schema, no rows
-      files.select(org(col("repo")).as("part"), lit(null).cast(StringType).as("rule_id"),
+      row.select(col("part"), lit(null).cast(StringType).as("rule_id"),
         lit(0L).as("violation_count"), lit(true).as("pass")).where(lit(false))
     else {
-      val counters = rules.zipWithIndex.map { case (r, i) => count_if(!r.pass).as(s"__v$i") }
       // identifiers/literals quoted into the stack expr, as in Profile.columns
-      val stackArgs = ids.zipWithIndex
-        .map { case (id, i) => s"${Profile.sqlStr(id)}, ${Profile.bq(s"__v$i")}" }.mkString(", ")
-      files.groupBy(org(col("repo")).as("part")).agg(counters.head, counters.tail: _*)
-        .select(col("part"), expr(s"stack(${rules.size}, $stackArgs) as (rule_id, n)"))
+      val stackArgs = rules.zipWithIndex
+        .map { case (r, i) => s"${Profile.sqlStr(r.id)}, ${Profile.bq(s"__v$i")}" }.mkString(", ")
+      row.select(col("part"), expr(s"stack(${rules.size}, $stackArgs) as (rule_id, n)"))
         // `stack` types its outputs nullable; a count never is, and the
         // committed schema (hashed into IceLite lineage) says so
         .withColumn("violation_count", coalesce(col("n"), lit(0L)))
         .select(col("part"), col("rule_id"), col("violation_count"),
           (col("violation_count") === 0L).as("pass"))
     }
-  }
 }

@@ -2,14 +2,16 @@ package graft
 
 import java.nio.file.{Files, Path}
 import graft.io.IceLite
-import graft.rules.FileRules
+import graft.rules.{Check, FileRules}
 import graft.synth.FilesTable
-import graft.validate.{CheckpointedValidation, Verdicts, Violations}
-import org.apache.spark.sql.DataFrame
+import graft.validate.{CheckpointedValidation, Profile, Verdicts, Violations}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Wave commits of [[CheckpointedValidation]]: every pending partition
   * lands in one grouped pass per table, so a run's Spark job count does
@@ -53,12 +55,50 @@ class WaveCommitSpec extends AnyFunSuite {
       }
       assert(j2 > 0)
       assert(math.abs(j8 - j2) <= 2, s"2 partitions: $j2 jobs, 8 partitions: $j8 jobs")
-      // the partition list comes from the collected metrics, not a scan
-      // of its own
-      assert(j2 <= 6 && j8 <= 6, s"2 partitions: $j2 jobs, 8 partitions: $j8 jobs")
+      // one aggregate (its shuffle and its collect) and one write per
+      // table: the partition list, metrics and verdicts all come from
+      // the collected aggregate
+      assert(j2 <= 5 && j8 <= 5, s"2 partitions: $j2 jobs, 8 partitions: $j8 jobs")
     } finally {
       spark.sparkContext.removeSparkListener(recorder)
       two.unpersist(); eight.unpersist()
+    }
+  }
+
+  test("a run reads an uncached input at most twice and persists nothing") {
+    val path = Files.createTempDirectory("wave-in").resolve("files.parquet").toString
+    filesOver(8).write.parquet(path)
+    // vectored parquet reads run off the task threads, where task input
+    // metrics do not see them
+    val input = spark.read.option("parquet.hadoop.vectored.io.enabled", "false").parquet(path)
+    val touched = Seq("repo", "path", "commit", "lang", "content", "content_sha256")
+    val recorder = new GroupJobs
+    val sc = spark.sparkContext
+    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    @volatile var running = true
+    val seenDuring = java.util.concurrent.ConcurrentHashMap.newKeySet[Set[Int]]()
+    val poller = new Thread(() => while (running) {
+      seenDuring.add(persisted); Thread.sleep(2)
+    })
+    sc.addSparkListener(recorder)
+    try {
+      val scan = recorder.inputBytesOf("noop-scan") {
+        input.select(touched.map(col): _*).write.format("noop").mode("overwrite").save()
+      }
+      poller.start()
+      val run = recorder.inputBytesOf("wave-read") {
+        CheckpointedValidation.run(spark, input, FileRules.rowRules, freshRoot())
+      }
+      running = false
+      poller.join()
+      assert(scan > 0)
+      assert(run <= 2 * scan, s"run read $run bytes, one scan of its columns $scan")
+      assert(seenDuring.asScala.toSet === Set(before))
+      assert(persisted === before)
+    } finally {
+      running = false
+      sc.removeSparkListener(recorder)
     }
   }
 
@@ -150,5 +190,68 @@ class WaveCommitSpec extends AnyFunSuite {
     assert(committed.exceptAll(direct).count() === 0)
     assert(direct.exceptAll(committed).count() === 0)
     assert(ice.lineage(spark).agg(sum("rows")).collect()(0).getLong(0) === 6L)
+  }
+
+  /** A [[graft.io.TableIO]] that keeps the rows and schema of every
+    * table a run hands to `commitParts`, and commits nothing. */
+  private final class Captured extends graft.io.TableIO {
+    val tables = scala.collection.mutable.Map.empty[String, (StructType, Seq[Row])]
+    def nextSnapshotId: Long = 1L
+    def completedParts(snap: Long): Set[String] = Set.empty
+    def commitParts(snap: Long, partCol: String, ts: Map[String, DataFrame],
+        rows: Map[String, Long]): Unit =
+      ts.foreach { case (n, df) => tables(n) = (df.schema, df.collect().toSeq) }
+    def commitSnapshot(snap: Long, parts: Seq[String]): Unit = ()
+    def readTable(spark: SparkSession, snap: Long, table: String): DataFrame =
+      sys.error("not committed")
+  }
+
+  /** `n` seeded random rows: every column NULL at times, the repos
+    * NULL, `"/x"` and `""` among them, and 30% of rows in one hot org. */
+  private def randomFiles(seed: Long, n: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    def sometimes(v: => String): String = if (rnd.nextInt(8) == 0) null else v
+    def word(len: Int): String = rnd.alphanumeric.take(1 + rnd.nextInt(len)).mkString
+    val repos = Seq[String](null, "/x", "", "a'b/r", "cold/r", "warm/r", "o`d\\/r")
+    val rows = (0 until n).map { _ =>
+      val content = sometimes(word(40))
+      Row(
+        if (rnd.nextDouble() < 0.3) "hot/r" else repos(rnd.nextInt(repos.size)),
+        sometimes(if (rnd.nextBoolean()) s"src/${word(6)}.py" else word(6)),
+        sometimes(f"${rnd.nextInt(1 << 30)}%08x"),
+        sometimes(Seq("en", "fr", "klingon")(rnd.nextInt(3))),
+        content,
+        sometimes(if (content != null && rnd.nextBoolean()) sha256(content) else word(64)))
+    }
+    val schema = StructType(Seq("repo", "path", "commit", "lang", "content", "content_sha256")
+      .map(StructField(_, StringType)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+
+  test("the wave's verdicts and metrics equal Verdicts.compute and " +
+    "Profile.columns on seeded random frames, schemas included") {
+    val rules = FileRules.rowRules :+
+      Check("odd'id`with\\quotes", "path", col("path").isNull || length(col("path")) < 8)
+    val profiled = Seq("repo", "path", "commit", "lang", "content")
+    def sorted(rows: Seq[Row]): Seq[String] = rows.map(_.mkString("|")).sorted
+    (1L to 5L).foreach { seed =>
+      val files = randomFiles(seed, 300)
+      val io = new Captured
+      CheckpointedValidation.run(spark, files, rules, io, None)
+      val verdicts = Verdicts.compute(spark, files, rules)
+      val metrics = Profile.columns(files.withColumn("part", Verdicts.org(col("repo"))),
+        profiled, exact = false, groupBy = Some("part"))
+      Seq("verdicts" -> verdicts, "metrics" -> metrics).foreach { case (name, want) =>
+        val (schema, rows) = io.tables(name)
+        assert(schema === want.schema, s"seed $seed: $name schema")
+        assert(sorted(rows) === sorted(want.collect().toSeq), s"seed $seed: $name rows")
+      }
+      assert(io.tables("verdicts")._2.map(_.getString(0)).toSet ===
+        Set("__null__", "__empty__", "a'b", "cold", "warm", "o`d\\", "hot"))
+    }
   }
 }
