@@ -66,7 +66,7 @@ object SparkEntry {
     else {
       // the parsed value: the raw conf string may carry a size suffix
       val maxSplit = sess.sessionState.conf.filesMaxPartitionBytes
-      val hconf = sess.sparkContext.hadoopConfiguration
+      val hconf = sess.sessionState.newHadoopConf()
       val splits = files.foldLeft(0L) { (acc, f) =>
         val p = new org.apache.hadoop.fs.Path(f)
         val len = try p.getFileSystem(hconf).getFileStatus(p).getLen
@@ -939,7 +939,7 @@ object SparkEntry {
           Seq("repo", "path", "commit", "lang", "content_sha256", "doc_id").map(col) ++
             (if (snap == 2L) Seq(license) else Nil) :+ col("__org"): _*))
       }
-      val ev = ice.readTableEvolved(s, 2L, "files")
+      val ev = ice.readTable(s, 2L, "files")
       require(ev.columns.contains("license"),
         "evolved read lost the appended column")
       ev.drop("part")

@@ -118,38 +118,30 @@ object StorageBench {
     val rows = 2000000L
     val ice = new IceLite(root)
     ice.setBucketSpec("files", "commitsha", buckets)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val prevBlock = Option(hconf.get("parquet.block.size"))
-    hconf.set("parquet.block.size", (1 << 20).toString)
-    val parts = try {
-      // pre-repartition BY THE TRANSFORM so each bucket lands as one
-      // file (the compacted steady state); tune the bloom to the
-      // per-bucket NDV — an untuned parquet bloom (1M default) writes
-      // ~1.2 MiB per chunk, more than the data it guards at this size
-      val df = spark.range(rows).toDF("doc_id")
-        .withColumn("commitsha",
-          md5(concat(lit("c"), col("doc_id").cast("string"))))
-        .withColumn("content", sha2(col("doc_id").cast("string"), 256))
-      val routed = df.repartition(buckets,
-        IceLite.bucketColumn(col("commitsha"), buckets))
-      // dictionary OFF for the probe column: at production row-group
-      // sizes a 32-byte-value dictionary exceeds parquet's 1 MiB
-      // dictionary-page cap and falls back to PLAIN anyway (losing
-      // dictionary-page row-group filtering) — this bench forces that
-      // real state at small scale so the bloom is measured against the
-      // encoding a 100 TB table actually has
-      val p = ice.ingestBucketed(spark, 1L, "files", routed,
-        bloomColumns = Seq("commitsha"),
-        writeOptions = Map(
-          "parquet.bloom.filter.expected.ndv#commitsha" ->
-            (rows / buckets).toString,
-          "parquet.enable.dictionary" -> "false"))
-      ice.commitSnapshot(1L, p)
-      p
-    } finally {
-      prevBlock.fold(hconf.unset("parquet.block.size"))(
-        hconf.set("parquet.block.size", _))
-    }
+    // pre-repartition BY THE TRANSFORM so each bucket lands as one
+    // file (the compacted steady state); tune the bloom to the
+    // per-bucket NDV — an untuned parquet bloom (1M default) writes
+    // ~1.2 MiB per chunk, more than the data it guards at this size
+    val df = spark.range(rows).toDF("doc_id")
+      .withColumn("commitsha",
+        md5(concat(lit("c"), col("doc_id").cast("string"))))
+      .withColumn("content", sha2(col("doc_id").cast("string"), 256))
+    val routed = df.repartition(buckets,
+      IceLite.bucketColumn(col("commitsha"), buckets))
+    // dictionary OFF for the probe column: at production row-group
+    // sizes a 32-byte-value dictionary exceeds parquet's 1 MiB
+    // dictionary-page cap and falls back to PLAIN anyway (losing
+    // dictionary-page row-group filtering) — this bench forces that
+    // real state at small scale so the bloom is measured against the
+    // encoding a 100 TB table actually has
+    val parts = ice.ingestBucketed(spark, 1L, "files", routed,
+      bloomColumns = Seq("commitsha"),
+      writeOptions = Map(
+        "parquet.block.size" -> (1 << 20).toString,
+        "parquet.bloom.filter.expected.ndv#commitsha" ->
+          (rows / buckets).toString,
+        "parquet.enable.dictionary" -> "false"))
+    ice.commitSnapshot(1L, parts)
     def probeVal(i: Long): String = {
       val dig = java.security.MessageDigest.getInstance("MD5")
         .digest(s"c$i".getBytes("UTF-8"))

@@ -504,7 +504,9 @@ class IceLite(val root: String) extends TableIO {
     (JsonMethods.parse(Files.readString(f)) \ "parts").extract[Seq[String]]
   }
 
-  /** Read a table of a committed snapshot across all its partitions. */
+  /** Read a table of a committed snapshot across all its partitions,
+    * under the schema their lineage records declare (schema eras
+    * reconciled, see [[readDirs]]). */
   def readTable(spark: SparkSession, snap: Long, table: String): DataFrame =
     readDirs(spark, snap, table, snapshotParts(snap))
 
@@ -704,6 +706,7 @@ class IceLite(val root: String) extends TableIO {
       writeOptions: Map[String, String] = Map.empty,
       parts: Option[Map[String, Option[Long]]] = None,
       srcFiles: Option[Seq[String]] = None): Seq[String] = {
+    refuseShadowing(partCol, tables)
     parts.foreach { ps =>
       val bad = ps.keys.filter(part => part == null || part.isEmpty)
       require(bad.isEmpty, "part names must be non-empty and non-NULL, got " +
@@ -760,6 +763,16 @@ class IceLite(val root: String) extends TableIO {
     dropStaging(_ == stage.getFileName.toString)
     landed
   }
+
+  /** Refuses a table holding a `part` column other than `partCol`: a
+    * read restores `part` from the directory names, which would shadow
+    * the stored values (the way [[IceLite.PartCol]] is reserved). */
+  private def refuseShadowing(partCol: String,
+      tables: Map[String, DataFrame]): Unit =
+    for ((name, df) <- tables) require(
+      !df.columns.exists(c => c.equalsIgnoreCase("part") && c != partCol),
+      s"table '$name' has its own part column, which a read would shadow " +
+        "with the partition name; rename it, or partition by it")
 
   /** Delete the staging dirs `doomed` names, then `tmp/` if that leaves
     * it empty (under the lock a landing creates its staging dir with). */
@@ -870,6 +883,7 @@ class IceLite(val root: String) extends TableIO {
     val (snap, newSnap) = rewriteIds("mergeRows")
     require(!updates.columns.contains(IceLite.BucketCol),
       s"updates already have a ${IceLite.BucketCol} column")
+    refuseShadowing(IceLite.BucketCol, Map(table -> updates))
     atomicWrite(lineageDir(newSnap).resolve(IceLite.OpMarker), "merge")
     val ub = updates.withColumn(IceLite.BucketCol,
       IceLite.bucketColumn(updates(spec.column), spec.buckets))
@@ -909,9 +923,12 @@ class IceLite(val root: String) extends TableIO {
             IceLite.bucketColumn(survivors(spec.column), spec.buckets))
           .unionByName(ub)
       }
+    // the ledger records what lands: the union takes the existing
+    // table's column order and widens types, so `updates.schema` can
+    // differ from the written files
     landStaged(spark, newSnap, "merge", IceLite.BucketCol,
       Map(table -> clustered(spark, merged, IceLite.BucketCol)),
-      Map(table -> updates.schema.json), "bucket=" + _)
+      schemasWithout(IceLite.BucketCol, Map(table -> merged)), "bucket=" + _)
     commitSnapshot(newSnap,
       ((parts.toSet -- existingParts) ++ affectedParts).toSeq.sorted)
     newSnap
@@ -952,14 +969,15 @@ class IceLite(val root: String) extends TableIO {
   // ── schema evolution ──────────────────────────────────────────────
 
   /** hash → schema JSON; interned files are immutable, and without the
-    * cache an evolved read over 10^5 partitions would re-read the same
+    * cache a read over 10^5 partitions would re-read the same
     * few era files once per partition. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The recorded Spark schema (StructType json) of one partition's
-    * table files — the per-era ledger [[readTableEvolved]] reconciles.
-    * None for records written before schema capture (round 7). */
+    * table files — the per-era ledger every read declares (see
+    * [[readDirs]]). None for records written before schema capture
+    * (round 7). */
   def partSchemaJson(snap: Long, part: String,
       table: String): Option[String] =
     lineageDoc(snap, part).flatMap(d =>
@@ -1009,81 +1027,94 @@ class IceLite(val root: String) extends TableIO {
       }
     }
 
-  /** Read `table` across SCHEMA ERAS (Iceberg schema evolution): a
-    * snapshot whose partitions were committed under different schemas —
-    * columns added or dropped across appends — comes back as ONE frame
-    * under a reconciled schema. Each era's partitions read as their own
-    * group (homogeneous, so footer inference is exact and costs one
-    * group, not a full mergeSchema pass over every file); columns an
-    * era lacks fill with typed NULLs; groups union by name.
-    * Reconciliation is deterministic: the era with the most columns
-    * orders first (ties by schema text), extra columns append in
-    * first-seen order, and a column typed differently across eras
-    * resolves to the WIDEST numeric type among them (the standard
+  /** The one read behind every IceLite read: `table` over `parts` of
+    * `snap`, each read DECLARING its schema — the ledger's data schema
+    * plus `part: string` — so no footer inference job runs, and the
+    * part column is restored from the directory names as the string it
+    * is (an all-numeric org stays "0100") with the session's inference
+    * setting untouched. basePath must be the ENCODED table dir of the
+    * snapshot holding the bytes (the compaction indirection may put a
+    * part's bytes under an older snapshot; a cross-snapshot ancestor
+    * would put snap=N into partition discovery), so each data location
+    * reads on its own and the locations union.
+    *
+    * Parts committed under different schemas — columns added or dropped
+    * across appends (Iceberg schema evolution) — come back as ONE frame
+    * under a reconciled schema: each era's parts read under that era's
+    * ledger schema; columns an era lacks fill with typed NULLs; groups
+    * union by name. Reconciliation is deterministic: the era with the
+    * most columns orders first (ties by schema text), extra columns
+    * append in first-seen order, and a column typed differently across
+    * eras resolves to the WIDEST numeric type among them (the standard
     * byte→short→int→long→float→double promotion ladder; non-numeric
-    * conflicts keep the ordering era's type and cast the rest).
-    * Partitions with no recorded schema (pre-capture records) read as
-    * one group under `mergeSchema`. A single-era table takes the plain
-    * [[readTable]] path — zero overhead. */
-  def readTableEvolved(spark: SparkSession, snap: Long,
-      table: String): DataFrame = {
+    * conflicts keep the ordering era's type and cast the rest). A
+    * single-era table reads as one group. Parts with no recorded schema
+    * (records written before schema capture) form one era whose schema
+    * comes from a `mergeSchema` read of their leaf `part=<p>` dirs,
+    * which discovers no partition column. A stored column named `part`,
+    * which commits refuse (see [[landStaged]]) but older tables may
+    * hold, is shadowed by the directory's. */
+  private def readDirs(spark: SparkSession, snap: Long, table: String,
+      parts: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val parts = snapshotParts(snap)
+    import org.apache.spark.sql.types._
+    // an empty input commits a VALID snapshot with zero partitions;
+    // there is no schema to declare, so surface the actual situation
     require(parts.nonEmpty,
-      s"snapshot $snap of '$table' has no partitions; nothing to read")
+      s"snapshot $snap of '$table' has no partitions (empty input run); " +
+        "nothing to read")
+    def read(data: StructType, ps: Seq[String]): DataFrame = {
+      val schema = StructType(data.filterNot(_.name.equalsIgnoreCase("part")))
+        .add("part", StringType)
+      ps.groupBy(dataSnapOf(snap, _, table)).toSeq.sortBy(_._1)
+        .map { case (ds, qs) =>
+          spark.read.schema(schema)
+            .option("basePath", p("data", s"snap=$ds", enc(table)).toString)
+            .parquet(qs.map(partDataDir(ds, table, _)): _*)
+        }.reduce(_.unionByName(_))
+    }
     // era key NORMALIZED to (name, type) in field order: nullability /
     // metadata differences between logically identical schemas (a
     // toDF plan records non-null longs, a read-back plan nullable
     // ones) must not fragment the table into spurious eras — each
     // extra era costs a read group forever, since the ledger carries
-    // verbatim through compaction
-    val keyCache = scala.collection.mutable.HashMap.empty[String, String]
-    def eraKey(j: String): String = keyCache.getOrElseUpdate(j, {
-      import org.apache.spark.sql.types._
-      StructType(DataType.fromJson(j).asInstanceOf[StructType].fields
-        .map(f => StructField(f.name, f.dataType))).json
+    // verbatim through compaction. Each era reads under the schema of
+    // its first part's record.
+    val parsed = scala.collection.mutable.HashMap.empty[String, (StructType, StructType)]
+    def era(j: String): (StructType, StructType) = parsed.getOrElseUpdate(j, {
+      val s = DataType.fromJson(j).asInstanceOf[StructType]
+      (StructType(s.map(f => StructField(f.name, f.dataType))), s)
     }) // memoized: one parse per distinct schema, not per partition
-    val byEra = parts.groupBy(partSchemaJson(snap, _, table).map(eraKey)).toSeq
-    // single RECORDED era: plain read, zero overhead. A single
-    // UNrecorded era (all pre-capture records) must still read under
-    // mergeSchema — those files may span schemas the ledger never saw.
-    if (byEra.size == 1 && byEra.head._1.nonEmpty)
-      readDirs(spark, snap, table, parts)
-    else if (byEra.size == 1)
-      readDirs(spark, snap, table, parts, Map("mergeSchema" -> "true"))
+    val groups = parts.map(part => part -> partSchemaJson(snap, part, table).map(era))
+      .groupBy(_._2.map(_._1)).toSeq
+      .sortBy { case (key, _) => (key.isEmpty, key.fold("")(_.json)) }
+      .map { case (_, members) =>
+        val ps = members.map(_._1)
+        val data = members.head._2.fold(spark.read.option("mergeSchema", "true")
+          .parquet(ps.map(part => partDataDir(dataSnapOf(snap, part, table), table, part)): _*)
+          .schema)(_._2)
+        val df = read(data, ps)
+        (df.schema, df)
+      }
+    if (groups.size == 1) groups.head._2
     else {
-      val groups: Seq[(StructType, DataFrame)] = byEra
-        .sortBy { case (era, _) => (era.isEmpty, era.getOrElse("")) }
-        .map { case (era, ps) =>
-          val df = readDirs(spark, snap, table, ps.sorted,
-            if (era.isEmpty) Map("mergeSchema" -> "true")
-            else Map.empty[String, String])
-          (df.schema, df)
-        }
       val ordered = groups.sortBy { case (sch, _) =>
         (-sch.fields.length, sch.json)
       }
-      val target: Seq[(String, DataType)] = {
-        import org.apache.spark.sql.types._
-        val ladder: Seq[DataType] = Seq(ByteType, ShortType, IntegerType,
-          LongType, FloatType, DoubleType)
-        def widen(a: DataType, b: DataType): DataType = {
-          val (ia, ib) = (ladder.indexOf(a), ladder.indexOf(b))
-          if (ia >= 0 && ib >= 0) ladder(math.max(ia, ib)) else a
-        }
-        val seen = scala.collection.mutable.LinkedHashMap.empty[String, DataType]
-        ordered.foreach { case (sch, _) =>
-          sch.fields.foreach(f => seen.get(f.name) match {
-            case None => seen.put(f.name, f.dataType)
-            case Some(t) => seen.put(f.name, widen(t, f.dataType))
-          })
-        }
-        seen.toSeq
+      val ladder: Seq[DataType] = Seq(ByteType, ShortType, IntegerType,
+        LongType, FloatType, DoubleType)
+      def widen(a: DataType, b: DataType): DataType = {
+        val (ia, ib) = (ladder.indexOf(a), ladder.indexOf(b))
+        if (ia >= 0 && ib >= 0) ladder(math.max(ia, ib)) else a
+      }
+      val target = scala.collection.mutable.LinkedHashMap.empty[String, DataType]
+      ordered.foreach { case (sch, _) =>
+        sch.fields.foreach(f => target.put(f.name,
+          target.get(f.name).fold(f.dataType)(widen(_, f.dataType))))
       }
       ordered.map { case (sch, df) =>
         val have = sch.fields.map(f => f.name -> f.dataType).toMap
-        df.select(target.map { case (n, t) =>
+        df.select(target.toSeq.map { case (n, t) =>
           have.get(n) match {
             case Some(dt) if dt == t => col(n)
             case Some(_) => col(n).cast(t).as(n)
@@ -1091,49 +1122,6 @@ class IceLite(val root: String) extends TableIO {
           }
         }: _*)
       }.reduce(_.unionByName(_))
-    }
-  }
-
-  private def readDirs(spark: SparkSession, snap: Long, table: String,
-      parts: Seq[String],
-      options: Map[String, String] = Map.empty): DataFrame = {
-    // an empty input commits a VALID snapshot with zero partitions;
-    // spark.read.parquet() with no paths throws UNABLE_TO_INFER_SCHEMA,
-    // so surface the actual situation instead
-    require(parts.nonEmpty,
-      s"snapshot $snap of '$table' has no partitions (empty input run); " +
-        "nothing to read")
-    // compaction indirection: a partition's bytes may live under an
-    // older snapshot's dir. basePath must stay a SINGLE table dir (a
-    // cross-snapshot ancestor would put snap=N into partition
-    // discovery), so group by data location and union the groups —
-    // one read per distinct location snapshot, almost always one total.
-    parts.groupBy(dataSnapOf(snap, _, table)).toSeq.sortBy(_._1)
-      .map { case (ds, ps) => readDirsAt(spark, ds, table, ps, options) }
-      .reduce(_.unionByName(_))
-  }
-
-  private def readDirsAt(spark: SparkSession, snap: Long, table: String,
-      parts: Seq[String],
-      options: Map[String, String] = Map.empty): DataFrame = {
-    val dirs = parts.map(partDataDir(snap, table, _))
-    // basePath must be the ENCODED table dir (an ancestor of the data
-    // paths partDataDir wrote), or encoded table names become unreadable.
-    // Partition type inference is disabled for the read: part names are
-    // NAMES — an all-numeric repo org would otherwise come back as an
-    // IntegerType column (and "0100" as 100).
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    // the toggle mutates SHARED session conf and read.parquet resolves
-    // partitions eagerly under it — serialize concurrent readers so one
-    // thread's restore can't re-enable inference mid-resolution in
-    // another (an all-numeric part name would come back as IntegerType)
-    IceLite.readLock.synchronized {
-      val prev = spark.conf.getOption(inferKey)
-      spark.conf.set(inferKey, "false")
-      try spark.read.options(options)
-        .option("basePath", p("data", s"snap=$snap", enc(table)).toString)
-        .parquet(dirs: _*)
-      finally prev.fold(spark.conf.unset(inferKey))(spark.conf.set(inferKey, _))
     }
   }
 
@@ -1277,22 +1265,20 @@ class IceLite(val root: String) extends TableIO {
     val allItems = classified.flatMap(_._3)
     // phase 2a: grouped single-job rewrites (sequential across the few
     // buckets — each is one multi-partition Spark job). The SCHEMA ERA
-    // is part of the group key: one spark.read over mixed-era
-    // partitions would materialize every row under whichever schema
-    // inference picked, silently dropping a newer era's column from
-    // the rewritten bytes while the carried ledger still claims it
-    // (caught by the round-7 model check). Era-less legacy records
-    // group together under a mergeSchema read — lossless, at the cost
-    // of widening those rows to the merged shape.
+    // is part of the group key: one read over mixed-era partitions
+    // reconciles every row to the widened shape, so the rewritten bytes
+    // would no longer be what the carried ledger records for each era
+    // (a widened int column under a ledger that still declares int).
+    // Era-less legacy records group together under readDirs' mergeSchema
+    // fallback — lossless, at the cost of widening those rows to the
+    // merged shape.
     val grouped = allItems
       .filter(i => i.packed == 1 && i.before.files > 1)
       .groupBy(i => (i.table, i.src, i.era)).toSeq.sortBy(_._1)
-    grouped.foreach { case ((table, src, era), items) =>
+    grouped.foreach { case ((table, _, _), items) =>
       val n = math.max(1, math.min(items.size,
         spark.sparkContext.defaultParallelism * 2))
-      readDirsAt(spark, src, table, items.map(_.part),
-        if (era.isEmpty) Map("mergeSchema" -> "true")
-        else Map.empty[String, String])
+      readDirs(spark, snap, table, items.map(_.part))
         .repartition(n, org.apache.spark.sql.functions.col("part"))
         .write.mode("append").partitionBy("part")
         .parquet(p("data", s"snap=$newSnap", enc(table)).toString)
@@ -1315,7 +1301,7 @@ class IceLite(val root: String) extends TableIO {
     // phase 2b: solo multi-file rewrites, one job each, fanned out
     DriverFanOut(spark, IceLite.RewriteWidth,
         allItems.filter(i => i.packed > 1 && i.packed < i.before.files)) { i =>
-      spark.read.parquet(partDataDir(i.src, i.table, i.part))
+      readDirs(spark, snap, i.table, Seq(i.part)).drop("part")
         .coalesce(i.packed).write.mode("overwrite")
         .parquet(partDataDir(newSnap, i.table, i.part))
     }
@@ -1392,9 +1378,8 @@ class IceLite(val root: String) extends TableIO {
       // pruned-out partition: NO new record — commitSnapshot
       // inherits the parent's manifest doc by reference
       if (mayMatch) {
-        val src = dataSnapOf(snap, part, table)
         val dst = partDataDir(newSnap, table, part)
-        val kept = spark.read.parquet(partDataDir(src, table, part))
+        val kept = readDirs(spark, snap, table, Seq(part)).drop("part")
           .filter(not(coalesce(pred, lit(false))))
         kept.write.mode("overwrite").parquet(dst)
         // a delete that empties the partition can write ZERO data
@@ -1569,9 +1554,6 @@ class IceLite(val root: String) extends TableIO {
 }
 
 object IceLite {
-  /** Guards the session-conf toggle in readDirs (see there). */
-  private[io] val readLock = new Object
-
   /** Orders creating a staging dir before removing an empty `tmp/`. */
   private[io] val stagingLock = new Object
 

@@ -72,7 +72,7 @@ object Sources {
 
   def table(spark: SparkSession, path: String, spec: TableSpec = TableSpec()): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
-    val hconf = spark.sparkContext.hadoopConfiguration
+    val hconf = spark.sessionState.newHadoopConf()
     val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
     // resolve against the PATH's filesystem (not the default one): a
     // fully-qualified s3a://... glob must not be listed via file:
@@ -228,9 +228,9 @@ object Sources {
     * diverging from every playbook written against goavro rows. */
   def avro(spark: SparkSession, path: String): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val fs = new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hconf = spark.sessionState.newHadoopConf()
+    val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
+    val fs = new HPath(path).getFileSystem(hconf)
     val files = fs.globStatus(new HPath(path)) match {
       case null => Array.empty[String]
       case st => st.map(_.getPath.toString)
@@ -310,7 +310,7 @@ object Sources {
         .drop("__uri")
     } else {
       import org.apache.hadoop.fs.{Path => HPath}
-      val hconf = spark.sparkContext.hadoopConfiguration
+      val hconf = spark.sessionState.newHadoopConf()
       val fs = new HPath(pattern).getFileSystem(hconf)
       val files = (fs.globStatus(new HPath(pattern)) match {
         case null => Array.empty[org.apache.hadoop.fs.FileStatus]

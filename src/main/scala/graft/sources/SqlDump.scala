@@ -26,7 +26,7 @@ object SqlDump {
   def load(spark: SparkSession, path: String,
       tables: Seq[String] = Seq.empty): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
-    val hconf = spark.sparkContext.hadoopConfiguration
+    val hconf = spark.sessionState.newHadoopConf()
     val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
     val fs = new HPath(path).getFileSystem(hconf)
     val files = (fs.globStatus(new HPath(path)) match {

@@ -55,7 +55,7 @@ object SqliteSource {
   }
 
   def table(spark: SparkSession, path: String, tableName: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
+    val hconf = spark.sessionState.newHadoopConf()
     val cap = bufferCapOverride.getOrElse(BufferCap) // captured once, see above
     // tasks must resolve the path with the DRIVER's filesystem settings
     // (fs.defaultFS, object-store credentials set via spark.hadoop.*) —
@@ -126,7 +126,7 @@ object SqliteSource {
 
   /** List of (name, sql) for all tables in the file. */
   def tables(spark: SparkSession, path: String): Seq[(String, String)] = {
-    val bytes = openBytes(path, spark.sparkContext.hadoopConfiguration)
+    val bytes = openBytes(path, spark.sessionState.newHadoopConf())
     try new Db(bytes).masterRows.collect {
       case ("table", name, _, sql) => (name, sql)
     } finally bytes.close()

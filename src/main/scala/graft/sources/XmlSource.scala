@@ -107,9 +107,9 @@ object XmlSource {
     * not just executor-local paths. */
   def xml(spark: SparkSession, path: String, level: Int): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val fs = new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hconf = spark.sessionState.newHadoopConf()
+    val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
+    val fs = new HPath(path).getFileSystem(hconf)
     val files = Option(fs.globStatus(new HPath(path)))
       .getOrElse(Array.empty).map(_.getPath.toString).toIndexedSeq
     // loud like table()/avro(): a typo'd glob must not surface as a

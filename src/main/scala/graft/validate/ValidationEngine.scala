@@ -162,11 +162,14 @@ object Referential {
   }
 
   /** As [[orphans]] but with the broadcast decision supplied by the
-    * caller (e.g. from table-level stats) — skips the probe count job. */
+    * caller (e.g. from table-level stats) — skips the probe count job.
+    * A broadcast dimension keeps its duplicates: they cannot change an
+    * anti join's result, and deduplicating them costs a job. */
   def orphansKnownSize(files: DataFrame, manifest: DataFrame,
-      column: String, refKey: String, broadcastDim: Boolean): DataFrame =
-    orphansJoin(files, manifest.select(col(refKey).as("__ref_key")).distinct(),
-      column, broadcastDim)
+      column: String, refKey: String, broadcastDim: Boolean): DataFrame = {
+    val dim = manifest.select(col(refKey).as("__ref_key"))
+    orphansJoin(files, if (broadcastDim) dim else dim.distinct(), column, broadcastDim)
+  }
 
   /** The north rule's "broadcast or sort-merge chosen by cardinality
     * stats", end-to-end: the dimension is an IceLite-committed table

@@ -47,7 +47,7 @@ class IceLiteSpec extends AnyFunSuite {
     val snap = ice.nextSnapshotId
     nasty.foreach { part =>
       ice.commitPartition(snap, part, 1L,
-        Map("t" -> Seq((part, 1L)).toDF("part", "n")))
+        Map("t" -> Seq((part, 1L)).toDF("name", "n")))
     }
     ice.commitSnapshot(snap, nasty)
     assert(ice.snapshotParts(snap).sorted === nasty.sorted)
@@ -74,8 +74,8 @@ class IceLiteSpec extends AnyFunSuite {
     "reserved part column never reaches the ledger") {
     import spark.implicits._
     val parts = Seq("a+b", "orgé", "sp ace")
-    // `t` has its own `part` data column; `z` has no rows anywhere
-    def t(part: String) = Seq((part, 1L), (part, 7L)).toDF("part", "n")
+    // `z` has no rows anywhere
+    def t(part: String) = Seq((part, 1L), (part, 7L)).toDF("name", "n")
     val z = Seq.empty[(String, Double)].toDF("k", "v")
     val one = freshRoot()
     val ice = new IceLite(one)
@@ -236,7 +236,7 @@ class IceLiteSpec extends AnyFunSuite {
     (1 to 3).foreach { v =>
       val snap = ice.nextSnapshotId
       ice.commitPartition(snap, part, 1L,
-        Map("t" -> Seq((part, v.toLong)).toDF("part", "version")))
+        Map("t" -> Seq((part, v.toLong)).toDF("name", "version")))
       ice.commitSnapshot(snap, Seq(part))
     }
     // time travel before GC: every snapshot readable with its own value
@@ -441,8 +441,8 @@ class IceLiteSpec extends AnyFunSuite {
     // the interactions the unit tests cover only pairwise (carry-forward
     // chains across compactions, expiry under mixed references, and —
     // since round 7 — SCHEMA ERAS: each append randomly writes era A
-    // (doc_id, part_name) or era B (+extra), so reads go through
-    // readTableEvolved over arbitrary era mixtures, compaction carrying
+    // (doc_id, part_name) or era B (+extra), so reads reconcile
+    // arbitrary era mixtures, compaction carrying
     // the ledger, and expiry dropping whole eras).
     val rnd = new scala.util.Random(20260817L)
     val partPool = Vector("p0", "p1", "p2", "p3")
@@ -450,7 +450,7 @@ class IceLiteSpec extends AnyFunSuite {
     val ice = new IceLite(root)
     var model = Map.empty[String, Set[Long]]
     // parts whose CURRENT data carries the era-B `extra` column — their
-    // values must read back non-null through any evolved read (an
+    // values must read back non-null through any read (an
     // all-null era-B partition is exactly what a mixed-era compaction
     // rewrite would silently produce if it lost the column)
     var eraB = Set.empty[String]
@@ -486,10 +486,9 @@ class IceLiteSpec extends AnyFunSuite {
     }
     def check(): Unit = {
       history.foreach { case (snap, m, eb) =>
-        // evolved read: equals readTable when eras are homogeneous,
-        // reconciles with typed NULLs when mixed — either way the model
-        // columns must read back exactly
-        val ev = ice.readTableEvolved(spark, snap, "t")
+        // one era reads as committed; mixed eras reconcile with typed
+        // NULLs — either way the model columns must read back exactly
+        val ev = ice.readTable(spark, snap, "t")
         val got = ev
           .select("part", "doc_id").collect()
           .groupBy(_.getString(0)).map { case (p, rs) =>
@@ -535,11 +534,11 @@ class IceLiteSpec extends AnyFunSuite {
     val root = freshRoot()
     val ice = new IceLite(root)
     val s1 = ice.nextSnapshotId
-    ice.commitPartition(s1, "p", 1L, Map("t" -> Seq(("p", 1L)).toDF("part", "n")))
+    ice.commitPartition(s1, "p", 1L, Map("t" -> Seq(("p", 1L)).toDF("name", "n")))
     ice.commitSnapshot(s1, Seq("p"))
     // start snapshot 2 but crash before commitSnapshot (lineage only)
     val s2 = ice.nextSnapshotId
-    ice.commitPartition(s2, "p", 1L, Map("t" -> Seq(("p", 2L)).toDF("part", "n")))
+    ice.commitPartition(s2, "p", 1L, Map("t" -> Seq(("p", 2L)).toDF("name", "n")))
     assert(ice.expireSnapshots(retain = 1) === Seq.empty) // v1 is current: kept
     assert(ice.completedParts(s2) === Set("p")) // resume state untouched
     assert(ice.readTable(spark, 1, "t").count() === 1)
@@ -961,18 +960,18 @@ class IceLiteSpec extends AnyFunSuite {
         .toDF("id", "name", "license")))
     ice.carryForwardPartition(2L, "old", 1L)
     ice.commitSnapshot(2L, Seq("old", "new"))
-    val ev = ice.readTableEvolved(spark, 2L, "t")
+    val ev = ice.readTable(spark, 2L, "t")
     assert(ev.columns.toSet === Set("id", "name", "license", "part"))
     val got = ev.select("id", "license").collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(got === Map(1L -> None, 2L -> None,
       3L -> Some("mit"), 4L -> Some("gpl")))
-    // single-era reads are untouched by the feature
-    assert(ice.readTableEvolved(spark, 1L, "t").columns.toSet ===
+    // a single-era read has only its own columns
+    assert(ice.readTable(spark, 1L, "t").columns.toSet ===
       Set("id", "name", "part"))
     // a compaction rewrite keeps each partition's schema era readable
     val c = ice.compactSnapshot(spark)
-    val ev2 = ice.readTableEvolved(spark, c, "t")
+    val ev2 = ice.readTable(spark, c, "t")
     assert(ev2.count() === 4)
     assert(ev2.filter(col("license").isNull).count() === 2)
   }
@@ -993,7 +992,7 @@ class IceLiteSpec extends AnyFunSuite {
         .toDF("doc_id", "part_name", "extra").repartition(2)))
     ice.commitSnapshot(1L, Seq("a", "b"))
     val c = ice.compactSnapshot(spark, targetFileBytes = 1L << 20)
-    val ev = ice.readTableEvolved(spark, c, "t")
+    val ev = ice.readTable(spark, c, "t")
     assert(ev.columns.contains("extra"),
       "compaction lost the era-B column entirely")
     val bVals = ev.filter(col("part") === "b")
@@ -1112,7 +1111,7 @@ class IceLiteSpec extends AnyFunSuite {
       Files.writeString(f, JsonMethods.compact(JsonMethods.render(doc)))
     }
     ice.commitSnapshot(1L, Seq("a", "b"))
-    val ev = ice.readTableEvolved(spark, 1L, "t")
+    val ev = ice.readTable(spark, 1L, "t")
     assert(ev.columns.contains("lic"),
       "single-legacy-era read dropped a column footer inference missed")
     assert(ev.filter(col("lic").isNotNull).count() === 1)
@@ -1227,7 +1226,7 @@ class IceLiteSpec extends AnyFunSuite {
       Map("t" -> Seq((5000000000L, "z")).toDF("n", "s")))
     ice.carryForwardPartition(2L, "p32", 1L)
     ice.commitSnapshot(2L, Seq("p32", "p64"))
-    val ev = ice.readTableEvolved(spark, 2L, "t")
+    val ev = ice.readTable(spark, 2L, "t")
     assert(ev.schema("n").dataType ===
       org.apache.spark.sql.types.LongType)
     assert(ev.select(sum("n")).collect()(0).getLong(0) === 5000000003L)
