@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on, with skew-join splitting: the uniqueness/verdict
   *    aggregations see a 30%-hot org key; AQE splits oversized
   *    post-shuffle partitions at runtime (on top of the engine's
-  *    SaltedAgg, which salts every count it runs, with no probe).
+  *    SaltedAgg, which salts every count it runs by map task, with no
+  *    probe).
   *  - shuffle partitions sized to the parallelism level, not the
   *    200 default (local mode) — on a real cluster AQE coalesces.
   *  - 128m file split target so a 100 TB table yields ~800k balanced

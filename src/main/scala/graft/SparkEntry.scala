@@ -1444,8 +1444,8 @@ object SparkEntry {
         col("doc_id") % 2 === 0)
     }),
     "v_salted_hot" -> ((s, d) =>
-      // the planted 30%-hot repo through the two-phase salted plan,
-      // which countByKeyAuto runs on every call
+      // the planted 30%-hot repo through the two-phase plan salted by
+      // map task, which countByKeyAuto runs on every call
       SaltedAgg.countByKeyAuto(FilesTable.files(s, d), Seq("repo"))),
     "d_simhash_pairs" -> ((s, d) =>
       // spread: the simhash evaluation runs pre-shuffle on the single

@@ -22,7 +22,9 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, LongType, 
   *    aggregate whose map-side partial counts bound a 30%-hot org;
   *    [[SaltedAgg]] counts per key through two-phase salting on every
   *    call, so a hot key costs no probe scan to detect: the skew is
-  *    spread inside the job that runs.
+  *    spread inside the job that runs. The salt is the map task's, so
+  *    phase 1 shuffles one partial row per key per task, no more than
+  *    a plain group-by does.
   *  - [[Referential.orphans]] picks broadcast vs shuffle join from the
   *    dimension's size, mirroring the north rule's "broadcast or
   *    sort-merge chosen by cardinality stats".
@@ -61,26 +63,27 @@ object Violations {
 }
 
 /** Two-phase salted count per key, the explicit skew handling for hot
-  * repos: phase 1 pre-aggregates on (key, salt), spreading a hot key
-  * over 32 reducers; phase 2 merges per key. The salted plan always
-  * runs, with no decision first: a probe that picks the plan is a
-  * sampled scan of its own, 3–4 Spark jobs ahead of the count's 3,
-  * while on a balanced key the salt only splits each group into at most
-  * 32 partial counts that the second phase merges. Rebalancing inside the
-  * job that runs, not probing before it, is DS2's argument (ICDE 2021,
-  * PAPERS.md). [[isSkewed]] stays as a diagnostic.
+  * repos: phase 1 pre-aggregates on (key, salt), spreading a hot key's
+  * partial counts from different map tasks over up to 32 reducers;
+  * phase 2 merges per key. The salt is the map task's partition id mod
+  * 32, so every row of a task shares it and the map-side partial
+  * aggregate emits one row per key per task — the rows a plain
+  * group-by shuffles — where a per-row salt would emit up to 32. The
+  * salted plan always runs, with no decision first: a probe that picks
+  * the plan is a sampled scan of its own, 3–4 Spark jobs ahead of the
+  * count's 3. Rebalancing inside the job that runs, not probing before
+  * it, is DS2's argument (ICDE 2021, PAPERS.md). [[isSkewed]] stays as
+  * a diagnostic.
   */
 object SaltedAgg {
   private val Salts = 32
 
   def countByKeyAuto(df: DataFrame, keys: Seq[String]): DataFrame =
-    // rand-based salt, NOT a content hash: a key hot because one
-    // byte-identical row repeats collapses a content-derived salt to a
-    // single value and recreates the skew wholesale. Counts are
-    // insensitive to WHICH salt a row lands on (each row counts once
-    // under any assignment), so rand's retry-nondeterminism is harmless
-    // here — it only redistributes the partial groups.
-    df.withColumn("_salt", floor(rand(42) * Salts).cast("int"))
+    // a salt from the task, not from the row's content, so a key hot
+    // because one byte-identical row repeats still spreads over the
+    // tasks that hold it, and a retried task keeps its salt. Counts do
+    // not depend on WHICH salt a row lands on: each row counts once.
+    df.withColumn("_salt", pmod(spark_partition_id(), lit(Salts)))
       .groupBy((keys.map(col) :+ col("_salt")): _*).agg(count(lit(1)).as("_partial"))
       .groupBy(keys.map(col): _*).agg(sum(col("_partial")).cast(LongType).as("n_rows"))
 
@@ -115,6 +118,12 @@ object SaltedAgg {
   * The reference's analog is first-wins `distinct` over a badger KV
   * (transform/distinct.go:24-62); we report the duplicates instead of
   * silently keeping one.
+  *
+  * NULL key components follow `GROUP BY`: NULL equals NULL, so rows
+  * that agree on every key component, NULLs included, form one group
+  * and count as duplicates. That is the DuckDB oracle's `vUniqueDups`.
+  * It is neither SQL `UNIQUE` (NULL never equals NULL) nor a certain
+  * key (a NULL component is refused).
   */
 object Uniqueness {
   def duplicates(files: DataFrame, keys: Seq[String]): DataFrame =
@@ -196,7 +205,10 @@ object Referential {
     // finding), not dangling references — without this filter every
     // null-FK row lands in the anti-join output (null never equals the
     // key) and gets double-reported; also matches the SQL-oracle
-    // semantics, where `NOT IN` is never true for NULL
+    // semantics, where `NOT IN` is never true for NULL. A NULL in the
+    // dimension matches no key either, so every orphan is still
+    // reported; the oracle's `NOT IN (SELECT ...)` would instead return
+    // no rows at all once the subquery holds a NULL
     files.filter(col(column).isNotNull)
       .join(right, files(column) === col("__ref_key"), "left_anti")
       .groupBy(col(column))

@@ -2,14 +2,15 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
-/** Counts the Spark jobs started under one job group, and the task
-  * input bytes they read. Register it with
-  * `sparkContext.addSparkListener` before calling [[jobsOf]] or
-  * [[inputBytesOf]]. */
+/** Counts the Spark jobs started under one job group, the task input
+  * bytes they read and the shuffle records they write. Register it
+  * with `sparkContext.addSparkListener` before calling [[jobsOf]],
+  * [[inputBytesOf]] or [[shuffleRecordsOf]]. */
 final class GroupJobs extends SparkListener {
   private val seen = scala.collection.mutable.Buffer.empty[String]
   private val groupOfStage = scala.collection.mutable.Map.empty[Int, String]
   private val read = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+  private val shuffled = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val group = Option(e.properties)
@@ -20,8 +21,10 @@ final class GroupJobs extends SparkListener {
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-    for (group <- groupOfStage.get(e.stageId); m <- Option(e.taskMetrics))
+    for (group <- groupOfStage.get(e.stageId); m <- Option(e.taskMetrics)) {
       read(group) += m.inputMetrics.bytesRead
+      shuffled(group) += m.shuffleWriteMetrics.recordsWritten
+    }
   }
 
   /** Waits until a job of `fence` (started after `group`'s) arrived:
@@ -52,5 +55,12 @@ final class GroupJobs extends SparkListener {
   def inputBytesOf(tag: String)(body: => Unit): Long = {
     tagged(tag)(body)
     synchronized(read(tag))
+  }
+
+  /** The shuffle records written by the jobs `body` starts under job
+    * group `tag`. */
+  def shuffleRecordsOf(tag: String)(body: => Unit): Long = {
+    tagged(tag)(body)
+    synchronized(shuffled(tag))
   }
 }

@@ -63,6 +63,29 @@ class ValidationSpec extends AnyFunSuite {
     assert(dups.forall(_.getAs[Long]("n_rows") === 2L))
   }
 
+  test("uniqueness: property — NULL key components group together, as in " +
+    "GROUP BY and the oracle's vUniqueDups") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val keys = Seq("a", "b", "c")
+    val schema = StructType(keys.map(StructField(_, StringType)))
+    (1 to 4).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val rows = Seq.fill(60)(keys.map(_ => Seq(null, "x", "y")(rnd.nextInt(3))))
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map(Row.fromSeq), 3), schema)
+      // brute force: Scala's groupBy, in which None equals None
+      val expected = rows.map(_.map(Option(_))).groupBy(identity)
+        .collect { case (k, ks) if ks.size > 1 => k -> ks.size.toLong }
+      keys.indices.foreach { i =>
+        assert(expected.keys.exists(_(i).isEmpty), s"seed $seed: no NULL at key $i")
+      }
+      val got = Uniqueness.duplicates(df, keys).collect()
+        .map(r => keys.indices.map(i => Option(r.getString(i))) -> r.getLong(keys.size)).toMap
+      assert(got === expected, s"seed $seed")
+    }
+  }
+
   test("referential: 7 orphan repos covering 26 file rows") {
     val o = Referential.orphans(files, FilesTable.repoManifest(spark, sf), "repo", "repo")
     val rows = o.collect()
@@ -250,6 +273,22 @@ class ValidationSpec extends AnyFunSuite {
     assert(got === Set(Some("rMISS")), s"null FK must not be an orphan: $got")
   }
 
+  test("referential: a NULL in the manifest hides no orphan, broadcast or " +
+    "shuffled (the oracle's NOT IN would return no rows)") {
+    import spark.implicits._
+    val f = Seq(("r1", 1L), (null.asInstanceOf[String], 2L), ("rMISS", 3L),
+      ("rMISS", 4L), ("r2", 5L)).toDF("repo", "doc_id")
+    val manifest = Seq("r1", null, "r1").toDF("repo")
+    def counts(o: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      o.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val expected = Map("rMISS" -> 2L, "r2" -> 1L)
+    assert(counts(Referential.orphans(f, manifest, "repo", "repo")) === expected)
+    Seq(true, false).foreach { b =>
+      assert(counts(Referential.orphansKnownSize(f, manifest, "repo", "repo",
+        broadcastDim = b)) === expected, s"broadcastDim = $b")
+    }
+  }
+
   test("salted aggregation agrees with the direct group-by under skew") {
     val direct = files.groupBy("repo").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -313,6 +352,37 @@ class ValidationSpec extends AnyFunSuite {
       assert(got.length === expected.size, s"seed $seed: one row per key")
       assert(got.map(r => keys.indices.map(r.getString) -> r.getLong(keys.size)).toMap ===
         expected, s"seed $seed")
+    } finally spark.sparkContext.removeSparkListener(recorder)
+  }
+
+  test("salted count: the shuffle writes at most one partial row per key " +
+    "per map task and per reduce task") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val schema = StructType(Seq(StructField("repo", StringType)))
+    val reducers = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val recorder = new GroupJobs
+    spark.sparkContext.addSparkListener(recorder)
+    // 200 rows per map task over 8 keys, one 30%-hot and one NULL; at
+    // P = 40 the partition id wraps past the 32 salts
+    try Seq(1, 3, 40).foreach { p =>
+      val rnd = new scala.util.Random(p)
+      val rows = Seq.fill(200 * p)(rnd.nextInt(10) match {
+        case 0 | 1 | 2 => "hot/r"
+        case 3 => null
+        case k => s"o$k/r"
+      })
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map(Row(_)), p), schema)
+      val expected = rows.groupBy(identity).map { case (k, rs) => k -> rs.size.toLong }
+      var got = Array.empty[Row]
+      val records = recorder.shuffleRecordsOf(s"salted-shuffle-$p") {
+        got = SaltedAgg.countByKeyAuto(df, Seq("repo")).collect()
+      }
+      assert(got.map(r => r.getString(0) -> r.getLong(1)).toMap === expected, s"P = $p")
+      // phase 1 writes ≤ one row per key per map task, phase 2 ≤ one
+      // per key per reduce task of phase 1
+      assert(records <= expected.size * (p + reducers), s"P = $p: $records shuffle records")
     } finally spark.sparkContext.removeSparkListener(recorder)
   }
 }
