@@ -75,8 +75,10 @@ object Main {
     println("outputs: verdicts, violations, metrics, lineage (IceLite snapshots)")
   }
 
-  /** GraftSession's knobs (AQE, skew-join, split sizing, UTC,
-    * extensions); master comes from spark-submit or defaults local.
+  /** GraftSession's knobs (AQE, skew-join, split sizing, UTC, zstd
+    * shuffle/broadcast/spill compression, extensions); master comes from
+    * spark-submit or defaults local. The zstd settings are per
+    * SparkContext, so an embedding's running context keeps its own codec.
     * Only stops the session if THIS call created it (library embedding
     * keeps its own session alive). One definition so a future session
     * knob can't drift between the two run modes. */

@@ -64,6 +64,14 @@ class JoinStrategySpec extends AnyFunSuite {
     try {
       assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") === "true")
       assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
-    } finally () // shared JVM: leave the session; configs are per-session
+    } finally () // shared JVM: leave the session, which may be the shared one
+    // (getOrCreate applies the builder's SQL confs to a running session but
+    // ignores its context-level confs: those are fixed per SparkContext)
+  }
+
+  test("the shared test session compresses shuffles and broadcasts with zstd") {
+    val conf = TestSpark.spark.sparkContext.getConf
+    assert(conf.get("spark.io.compression.codec") === "zstd")
+    assert(conf.get("spark.io.compression.zstd.bufferPool.enabled") === "false")
   }
 }

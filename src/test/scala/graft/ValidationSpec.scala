@@ -8,10 +8,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM-wide session, local[4]). */
+/** Shared session for all suites (one JVM-wide session, local[4]). It
+  * takes the engine's context-level settings, so every shuffle and
+  * broadcast of the suites is compressed as in a GraftSession. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
+      .config(GraftSession.contextConf)
       .master("local[4]")
       .appName("sifterspark-test")
       .config("spark.sql.shuffle.partitions", "4")
